@@ -1,11 +1,7 @@
 """Extra benchmarks for optimization work (guide §1.4): per-query noop-sink
-isolation, per-stage breakdowns for the composite queries, and
-``.explain("formatted")`` capture into plans/r06/.
-
-bench.py is FROZEN for measurement; everything exploratory lives here.
+isolation and per-stage breakdowns for the composite queries.
 
 Usage:
-  python bench_extra.py plans [before|after]   # explain dumps for headline
   python bench_extra.py noop [names...]        # noop-sink timing per query
   python bench_extra.py freeze                 # corpus_freeze stage breakdown
   python bench_extra.py dupspan                # dup_span_dedup stage breakdown
@@ -22,32 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-HEADLINE = [
-    "zonal_stats_rect",
-    "zonal_stats_poly",
-    "pip_grid",
-    "pip_grid_salted",
-    "focal_mean_sum",
-    "raster_add",
-    "count_pixels",
-    "knn",
-    "dedup_exact",
-    "ann_bruteforce_topk",
-    "corpus_freeze",
-    "dup_span_dedup",
-]
-
-
-def _session():
-    from scidbgeo_spark.session import get_spark
-
-    spark = get_spark("bench-extra", cores=CPUS, shuffle_partitions=CPUS)
-    spark.range(1000).select(F.sum("id")).collect()
-    return spark
+from bench import CPUS, HEADLINE, SF_DIR, _session
 
 
 def noop(df):
@@ -67,25 +38,8 @@ def timed(spark, label, df, sink="collect"):
     return dt
 
 
-def cmd_plans(tag="before"):
-    spark = _session()
-    qs = entrymod.queries()
-    outdir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")
-    os.makedirs(outdir, exist_ok=True)
-    names = sys.argv[3:] or HEADLINE
-    for name in names:
-        df = qs[name](spark, SF_DIR)
-        p = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        path = os.path.join(outdir, f"{name}_{tag}.txt")
-        with open(path, "w") as f:
-            f.write(p)
-        print(f"wrote {path} ({p.count('Exchange')} Exchange refs)")
-
-
 def cmd_noop():
-    spark = _session()
+    spark = _session(CPUS)
     qs = entrymod.queries()
     names = sys.argv[2:] or HEADLINE
     # warm (codegen, python workers, parquet footers)
@@ -100,7 +54,7 @@ def cmd_freeze():
     sample first, decontamination last over survivors)."""
     from scidbgeo_spark.operators import curation, dedup
 
-    spark = _session()
+    spark = _session(CPUS)
     entrymod._ensure_pyfiles(spark)
     docs = entrymod._docs(spark, SF_DIR)
     timed(spark, "docs scan", docs, "noop")
@@ -135,7 +89,7 @@ def cmd_freeze():
 def cmd_dupspan():
     from scidbgeo_spark.operators import dedup
 
-    spark = _session()
+    spark = _session(CPUS)
     entrymod._ensure_pyfiles(spark)
     docs = entrymod._docs(spark, SF_DIR)
     corp = dedup.dup_corpus(docs)
@@ -176,9 +130,7 @@ def cmd_dupspan():
 
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "noop"
-    if cmd == "plans":
-        cmd_plans(sys.argv[2] if len(sys.argv) > 2 else "before")
-    elif cmd == "freeze":
+    if cmd == "freeze":
         cmd_freeze()
     elif cmd == "dupspan":
         cmd_dupspan()

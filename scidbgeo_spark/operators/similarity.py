@@ -38,14 +38,19 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
+def _cosine_of(dot: Column, norm_a: Column, norm_b: Column) -> Column:
+    """dot / (|a|*|b|), NULL when either vector has zero norm (cosine
+    undefined): DuckDB's x/0 yields NULL while Spark's ANSI mode throws
+    DIVIDE_BY_ZERO — the guard pins the NULL semantics both agree on, so
+    one failed-encoder zero vector cannot kill a whole ANN query.  NULL
+    similarities rank last under the DESC ordering in both engines."""
+    den = norm_a * norm_b
+    return F.when(den > 0, dot / den)
+
+
 def cosine(a: Column, b: Column) -> Column:
-    """NULL when either vector has zero norm (cosine undefined): DuckDB's
-    x/0 yields NULL while Spark's ANSI mode throws DIVIDE_BY_ZERO — the
-    guard pins the NULL semantics both agree on, so one failed-encoder
-    zero vector cannot kill a whole ANN query.  NULL similarities rank
-    last under the DESC ordering in both engines."""
-    den = _norm(a) * _norm(b)
-    return F.when(den > 0, _dot(a, b) / den)
+    """Cosine similarity of two array columns (NULL on a zero norm)."""
+    return _cosine_of(_dot(a, b), _norm(a), _norm(b))
 
 
 def ann_bruteforce_topk(emb: DataFrame, n_queries: int = 8, k: int = 5) -> DataFrame:
@@ -74,8 +79,7 @@ def ann_bruteforce_topk(emb: DataFrame, n_queries: int = 8, k: int = 5) -> DataF
         F.col("embedding").alias("qe"),
         F.col("nv").alias("nq"),
     )
-    den = F.col("nq") * F.col("nv")
-    sim = F.when(den > 0, _dot(F.col("qe"), F.col("embedding")) / den)
+    sim = _cosine_of(_dot(F.col("qe"), F.col("embedding")), F.col("nq"), F.col("nv"))
     w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.col("vec_id"))
     return (
         emb.crossJoin(F.broadcast(q))

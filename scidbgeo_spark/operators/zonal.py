@@ -11,7 +11,7 @@ Spark-native re-expression:
    grid; polygons broadcast) -> zone tiles.  No GDAL.
 2. **join**: equi-join raster tiles x zone tiles on chunk keys — the
    positional join collapses to chunk-granular join + array-index math.
-3. **partial aggregate inside the kernel**: each joined chunk emits at most
+3. **partial aggregate before the shuffle**: each joined chunk emits at most
    (#zones-in-chunk) rows of (id, min, max, sum, count) — the shuffle
    carries per-(chunk,zone) partials, never pixels.  Same reason the
    reference runs grouped_aggregate server-side.
@@ -37,7 +37,6 @@ from scidbgeo_spark.kernels import rasterize_tile
 from scidbgeo_spark.tiling import TILE_KEYS
 
 ZONE_TILE_SCHEMA = "tile_y int, tile_x int, y0 long, x0 long, h int, w int, zid array<int>"
-PARTIAL_SCHEMA = "id long, mn long, mx long, s long, c long"
 
 
 def rasterize_polygons(
@@ -142,8 +141,7 @@ def zonal_stats_tiles(raster_tiles: DataFrame, zone_tiles: DataFrame) -> DataFra
     pixels-never-leave effect the reference gets by running
     grouped_aggregate server-side (SciDBParallel.py:700-706).  Output
     schema matches the printed header "geoid, min, max, average, count"
-    (scidb.py:64).  3-4x faster than the pandas-kernel variant below and
-    scales with cores (no Arrow transfer)."""
+    (scidb.py:64).  No Arrow transfer, so it scales with cores."""
     zt = zone_tiles.select(*TILE_KEYS, "zid")
     j = raster_tiles.join(zt, TILE_KEYS)
     # posexplode + O(1) element_at beats arrays_zip-then-explode: the zip
@@ -225,50 +223,6 @@ def zonal_mode(raster_tiles: DataFrame, zone_tiles: DataFrame) -> DataFrame:
         counts.withColumn("rk", F.row_number().over(win))
         .filter(F.col("rk") == 1)
         .select("id", F.col("v").alias("mode_value"), F.col("n").alias("n_pixels"))
-    )
-
-
-def zonal_stats_tiles_kernel(raster_tiles: DataFrame, zone_tiles: DataFrame) -> DataFrame:
-    """pandas-kernel variant: per-batch NumPy partials via mapInPandas.
-    Same semantics as zonal_stats_tiles; kept for payloads where the
-    per-tile compute is genuinely Python (e.g. float NaN-aware stats)."""
-    zt = zone_tiles.select(*TILE_KEYS, "zid")
-    joined = raster_tiles.join(zt, TILE_KEYS)
-
-    def _partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vals = np.concatenate([np.asarray(p, dtype=np.int64) for p in pdf["px"]])
-            zs = np.concatenate([np.asarray(z, dtype=np.int64) for z in pdf["zid"]])
-            g = (
-                pd.DataFrame({"id": zs, "v": vals})
-                .groupby("id", sort=False)["v"]
-                .agg(mn="min", mx="max", s="sum", c="count")
-                .reset_index()
-            )
-            yield g.astype({"id": "int64", "mn": "int64", "mx": "int64", "s": "int64", "c": "int64"})
-
-    partials = joined.select("px", "zid").mapInPandas(_partials, schema=PARTIAL_SCHEMA)
-    return finalize_partials(partials)
-
-
-def finalize_partials(partials: DataFrame) -> DataFrame:
-    return (
-        partials.groupBy("id")
-        .agg(
-            F.min("mn").alias("min_value"),
-            F.max("mx").alias("max_value"),
-            F.sum("s").alias("_s"),
-            F.sum("c").alias("count_value"),
-        )
-        .select(
-            "id",
-            "min_value",
-            "max_value",
-            (F.col("_s") / F.col("count_value")).alias("avg_value"),
-            "count_value",
-        )
     )
 
 

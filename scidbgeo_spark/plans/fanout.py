@@ -34,24 +34,23 @@ rand(); guide §2.5 on retry-safety under fetch failure).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
+
+# Spark's byte-size strings: an integer plus an optional b/k/m/g/t/p
+# unit, each unit with an optional trailing "b" (JavaUtils.byteStringAs)
+_SIZE = re.compile(r"(\d+)([kmgtp]?)b?")
+_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
 
 
 def _bytes_conf(spark, key: str, default: int) -> int:
-    """Parse a Spark size conf ("134217728", "134217728b", "128m"...)."""
-    try:
-        raw = str(spark.conf.get(key, str(default))).strip().lower()
-        mult = 1
-        for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-            if raw.endswith(suffix + "b") or raw.endswith(suffix):
-                raw = raw.rstrip("b").rstrip(suffix)
-                mult = m
-                break
-        else:
-            raw = raw.rstrip("b")
-        return int(float(raw) * mult)
-    except Exception:  # noqa: BLE001
+    """Parse a Spark size conf ("134217728", "134217728b", "128m", "1tb"...);
+    ``default`` when unset or unparseable."""
+    m = _SIZE.fullmatch(str(spark.conf.get(key, str(default))).strip().lower())
+    if m is None:
         return default
+    return int(m.group(1)) << _SHIFT[m.group(2)]
 
 
 def fan_out(

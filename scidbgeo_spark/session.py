@@ -11,7 +11,6 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-_AQE = "false" if os.environ.get("SPARK_GRAFT_AQE") == "0" else "true"
 
 
 def get_spark(
@@ -32,12 +31,9 @@ def get_spark(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        # AQE on by default; SPARK_GRAFT_AQE=0 disables it for scaling
-        # measurements where per-stage re-planning is a fixed driver cost
-        # that biases small-job core-count ratios
-        .config("spark.sql.adaptive.enabled", _AQE)
-        .config("spark.sql.adaptive.coalescePartitions.enabled", _AQE)
-        .config("spark.sql.adaptive.skewJoin.enabled", _AQE)
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
@@ -62,11 +58,7 @@ def _warm_python_stages(spark: SparkSession) -> None:
     already runs.  Without it, whichever operator first crosses the
     Python boundary (zonal's rasterize, focal's kernel) pays the daemon
     fork + exec-codegen inside its own timed run (~0.3-0.5 s measured),
-    which mis-attributes a fixed session cost to one arbitrary query.
-    Disable with SPARK_GRAFT_NO_PYWARM=1 (e.g. for pure-JVM batch
-    jobs that never cross the boundary)."""
-    if os.environ.get("SPARK_GRAFT_NO_PYWARM") == "1":
-        return
+    which mis-attributes a fixed session cost to one arbitrary query."""
     if spark.conf.get("spark.scidbgeo.pywarmed", "") == "1":
         return
     try:

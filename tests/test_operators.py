@@ -102,7 +102,7 @@ def test_focal_chunk_size_invariance(spark, coo, dense):
     assert outs[0] == outs[1] == outs[2]
 
 
-@pytest.mark.parametrize("impl", [zonal.zonal_stats_tiles, zonal.zonal_stats_tiles_kernel])
+@pytest.mark.parametrize("impl", [zonal.zonal_stats_tiles])
 def test_zonal_stats_tiles_vs_numpy(spark, sf_correct, impl):
     coo = model.raster_coo(spark, sf_correct)
     h, w = model.raster_dims(spark, sf_correct)

@@ -4,12 +4,14 @@ resume-from-checkpoint replays)."""
 
 import json
 import os
+from types import SimpleNamespace
 
+import pytest
 from pyspark.sql import functions as F
 
 from scidbgeo_spark import model
 from scidbgeo_spark.operators import pip
-from scidbgeo_spark.plans import lineage, skew
+from scidbgeo_spark.plans import fanout, lineage, skew
 
 
 def test_salted_counts_equal_plain_counts(spark, sf_correct):
@@ -58,8 +60,8 @@ def test_results_invariant_across_parallelism(spark, sf_correct):
     """North rule: join row sets / zone assignments / stats identical
     across parallelism levels.  Within one session the controllable
     parallelism axes are input partitioning and shuffle width — results
-    must be bitwise equal across them (local[8]-vs-local[32] equality is
-    exercised by bench.py's two-cluster-size runs)."""
+    must be bitwise equal across them (core-count equality is checked by
+    hand with ``tools/scale_smoke.py <cores>``)."""
     from scidbgeo_spark import fixtures, tiling
     from scidbgeo_spark.operators import zonal as z
 
@@ -120,3 +122,24 @@ def test_stale_fingerprint_recomputes(spark, sf_smoke, tmp_path):
     _, p1 = lineage.zonal_pipeline(spark, sf_smoke, wd, chunk=50)
     _, p2 = lineage.zonal_pipeline(spark, sf_smoke, wd, chunk=25)  # new config
     assert not any(v["skipped"] for v in p2.counters().values())
+
+
+@pytest.mark.parametrize(
+    "raw, want",
+    [
+        ("134217728", 134217728),
+        ("134217728b", 134217728),
+        ("128k", 128 << 10),
+        ("128M", 128 << 20),
+        ("64mb", 64 << 20),
+        ("2g", 2 << 30),
+        ("1t", 1 << 40),
+        ("1tb", 1 << 40),
+        ("2p", 2 << 50),
+        ("3pb", 3 << 50),
+        ("lots", 7),
+    ],
+)
+def test_fan_out_parses_every_spark_size_suffix(raw, want):
+    spark = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default: raw))
+    assert fanout._bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 7) == want
