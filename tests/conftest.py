@@ -7,11 +7,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scidbgeo_spark.session import get_spark  # noqa: E402
 
-# sf0.01 inputs need a few GB of driver heap; the session's 48g default
-# lets the test JVM grow past the RAM of a 16 GB host, where the kernel
-# kills it mid-suite
-os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
-
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
