@@ -15,8 +15,7 @@ semantics, implemented on plain parquet + JSON manifests so it runs in
 this container): snapshot-isolated MERGE of chunk updates with
 copy-on-write at tile_y-partition granularity, snapshot listing
 (SciDB ``versions(A)``), time-travel reads, optimistic commit via
-exclusive manifest creation, and snapshot expiry (version GC).  Swapping
-in real Iceberg is a config + writeTo change behind the same methods.
+exclusive manifest creation, and snapshot expiry (version GC).
 """
 
 from __future__ import annotations
@@ -75,22 +74,6 @@ class ArrayCatalog:
     # -- list('instances') -------------------------------------------------
     def instance_count(self) -> int:
         return self.spark.sparkContext.defaultParallelism
-
-    # -- Iceberg switch point ------------------------------------------------
-    def iceberg_available(self) -> bool:
-        """The production catalog is Iceberg (snapshots replace SciDB
-        array versions; MERGE INTO replaces insert(redimension(...));
-        bucket(tile_y, tile_x) partition specs give chunk placement).
-        This sandbox ships no Iceberg jars, so save()/save_tiles() write
-        hive-partitioned parquet with lineage manifests
-        (plans/lineage.py) as the functional stand-in.  Wiring Iceberg is
-        a config change: spark.sql.catalog.<name>=org.apache.iceberg...
-        and df.writeTo(...) in the two save methods."""
-        try:
-            self.spark._jvm.Class.forName("org.apache.iceberg.catalog.Catalog")
-            return True
-        except Exception:  # noqa: BLE001
-            return False
 
 
 class SnapshotCatalog:

@@ -68,17 +68,6 @@ def reclassify(coo: DataFrame, old: int, new: int, other: int = -99) -> DataFram
     )
 
 
-def reclassify_tiles(tiles: DataFrame, old: int, new: int, other: int = -99) -> DataFrame:
-    """Tile variant: vectorized per-chunk map (JVM ``transform``)."""
-    return tiles.withColumn(
-        "px",
-        F.transform(
-            F.col("px"),
-            lambda e: F.when(e == old, F.lit(new)).otherwise(F.lit(other)).cast("long"),
-        ),
-    )
-
-
 # -- O6 / O7 / O8: dimension-range ops ---------------------------------------
 
 def between(coo: DataFrame, y_min: int, x_min: int, y_max: int, x_max: int) -> DataFrame:
@@ -120,16 +109,6 @@ def slice_band(coo3: DataFrame, band: int) -> DataFrame:
 
 
 # -- O4 self-join + O2: raster overlay add -----------------------------------
-
-def overlay_add_coo(a: DataFrame, b: DataFrame) -> DataFrame:
-    """apply(join(apply(A,x1,value), apply(B,y1,value)), result, x1+y1)
-    — SciDB_analysis.py:92-113 (self-join in the reference).  Positional
-    join == equi-join on the dimension columns."""
-    bb = b.select(F.col("y"), F.col("x"), F.col("value").alias("value_b"))
-    return a.join(bb, ["y", "x"]).select(
-        "y", "x", (F.col("value") + F.col("value_b")).alias("result")
-    )
-
 
 def overlay_add_tiles(a: DataFrame, b: DataFrame) -> DataFrame:
     """Tile-native overlay: equi-join on chunk keys, then a JVM ``zip_with``

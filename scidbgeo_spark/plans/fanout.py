@@ -53,16 +53,12 @@ def _bytes_conf(spark, key: str, default: int) -> int:
     return int(m.group(1)) << _SHIFT[m.group(2)]
 
 
-def fan_out(
-    df: DataFrame, *key_cols: str, factor: int = 1, min_bytes: int = 0
-) -> DataFrame:
+def fan_out(df: DataFrame, *key_cols: str, min_bytes: int = 0) -> DataFrame:
     """Repartition ``df`` to the session's default parallelism iff its
     file-scan inputs cannot offer at least half that — otherwise return
     it untouched.  ``key_cols`` pick the deterministic hash-distribution
     key (a unique id spreads evenly); with none given, round-robin is
     used (pays the sort-before-repartition safety sort — prefer a key).
-    ``factor`` multiplies the target for operators whose per-row cost is
-    very uneven.
 
     ``min_bytes`` gates the whole decision on the optimizer's size
     estimate: operators whose per-row cost is modest (e.g. the
@@ -73,24 +69,21 @@ def fan_out(
     operators (gram/shingle hashing, cosine sweeps) pass
     ``min_bytes=0`` — they win even on sub-MB inputs."""
     spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism * factor
-    try:
-        files = df.inputFiles()
-        if not files:
-            # spark.range / in-memory relations: partitioned by
-            # construction (defaultParallelism slices) — never repartition
-            return df
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        if min_bytes > 0 and est < min_bytes:
-            return df
-        maxpb = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
-        scan_parts = max(1, -(-est // max(1, maxpb)))
-        if scan_parts * 2 >= target:
-            # splittable columnar scans get at least ceil(bytes/split)
-            # tasks — already parallel enough, a repartition would only
-            # add a shuffle
-            return df
-    except Exception:  # noqa: BLE001 — planning-only probe must never kill a query
+    target = spark.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    if not files:
+        # spark.range / in-memory relations: partitioned by
+        # construction (defaultParallelism slices) — never repartition
+        return df
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if min_bytes > 0 and est < min_bytes:
+        return df
+    maxpb = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+    scan_parts = max(1, -(-est // max(1, maxpb)))
+    if scan_parts * 2 >= target:
+        # splittable columnar scans get at least ceil(bytes/split)
+        # tasks — already parallel enough, a repartition would only
+        # add a shuffle
         return df
     if key_cols:
         return df.repartition(target, *key_cols)

@@ -17,13 +17,8 @@ salt bucket.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salt_column(id_col: str | Column, n_salt: int) -> Column:
-    c = F.col(id_col) if isinstance(id_col, str) else id_col
-    return F.pmod(F.hash(c), F.lit(n_salt)).alias("salt")
 
 
 def hot_keys(df: DataFrame, key: str, cap: int) -> DataFrame:

@@ -13,8 +13,8 @@ shared-filesystem path and range-reads its slice through SQLite's own
 B-tree, never the whole table).
 
 Exactly one driver-side metadata action (max fid + geometry column
-lookup — a few B-tree pages, the header-only GeoTIFF-dims precedent,
-engine.py:151-155); feature bytes only ever parse executor-side.
+lookup — a few B-tree pages, the header-only precedent of
+``sources.geotiff.tiff_dims``); feature bytes only ever parse executor-side.
 
 Ring arrays follow the engine's OPEN-ring convention (sources/vector.py
 drops the closing vertex); multi-ring geometries (holes / multipolygon

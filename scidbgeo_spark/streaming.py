@@ -45,22 +45,6 @@ def hourly_event_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     )
 
 
-def run_append_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
-    """Drive an append-mode stream (dedup, stateless maps) to completion
-    synchronously and return the materialized rows."""
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
-
-
 def run_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
     """Drive a streaming aggregation to completion synchronously and
     return the materialized result (test/demo harness)."""
@@ -281,34 +265,6 @@ def sessionize_stream(spark: SparkSession, events_dir: str) -> DataFrame:
         stateStructType="n_sessions long, n_events long, last_us long, n_ooo long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_update_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
-    """Drive an update-mode stateful stream to completion and return the
-    LAST emitted row per key (the final state)."""
-    q = (
-        stream_df.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    spark = stream_df.sparkSession
-    # update mode appends one row per key per batch; the final state per
-    # key is the row with the max n_events (totals are monotone).  A
-    # window avoids the self-join (ambiguous against a memory-sink view).
-    from pyspark.sql import Window
-
-    t = spark.table(name)
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        t.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_sessions", "n_events")
     )
 
 

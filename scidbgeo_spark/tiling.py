@@ -16,15 +16,10 @@ shuffle SciDB's redimension performs cluster-wide.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TILE_KEYS = ["tile_y", "tile_x"]
-
-
-def tile_key(col: str | Column, chunk: int) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return (c - (c % chunk)) / chunk
 
 
 def with_tile_keys(coo: DataFrame, chunk: int) -> DataFrame:

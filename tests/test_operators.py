@@ -59,6 +59,14 @@ def test_count_pixels_sum_semantics(coo, dense):
     assert (got or 0) == want
 
 
+def test_count_pixels_tiles_vs_numpy(tiles, dense):
+    """Tile-payload filter+sum equals the NumPy sum, for an absent value
+    and a present one."""
+    for v in (42, int(dense[3, 7])):
+        got = pixel.count_pixels_tiles(tiles, v).collect()[0].pixel_sum
+        assert (got or 0) == int(dense[dense == v].sum()), v
+
+
 def test_reclassify_sum(coo, dense):
     got = pixel.reclassify_sum(coo, 87, 1000).collect()[0].reclass_sum
     assert got == 1000 * int((dense == 87).sum())
@@ -68,6 +76,7 @@ def test_between_subarray(coo, dense):
     got = pixel.between(coo, 2, 10, 5, 20).collect()
     assert len(got) == 4 * 11
     sub = pixel.subarray(coo, 2, 10, 5, 20).collect()
+    assert {(r.y, r.x) for r in sub} == {(y, x) for y in range(4) for x in range(11)}
     for r in sub:
         assert dense[r.y + 2, r.x + 10] == r.value
 
@@ -89,6 +98,25 @@ def test_focal_sum36_vs_numpy(spark, tiles, dense):
         np.pad(dense, 1), np.pad(np.ones_like(dense, bool), 1), (slice(1, h + 1), slice(1, w + 1))
     )
     assert got == want
+
+
+def test_focal_extrema_vs_numpy(tiles, coo, dense):
+    """Shrinking-window min/max at every cell equals NumPy, at radius 1
+    and 2, and at a ragged chunk (3) whose halos cross every tile edge."""
+    h, w = dense.shape
+    for radius, ch in ((1, CHUNK), (1, 3), (2, CHUNK)):
+        t = tiles if ch == CHUNK else tiling.pack_tiles(coo, ch, h, w)
+        got = {
+            (r.y, r.x): (r.min_value, r.max_value)
+            for r in focal.focal_extrema_coo(t, h, w, ch, radius).collect()
+        }
+        want = {}
+        for y in range(h):
+            for x in range(w):
+                win = dense[max(0, y - radius) : y + radius + 1,
+                            max(0, x - radius) : x + radius + 1]
+                want[(y, x)] = (int(win.min()), int(win.max()))
+        assert got == want, (radius, ch)
 
 
 def test_focal_chunk_size_invariance(spark, coo, dense):
@@ -241,6 +269,7 @@ def test_region_vectorize_envelopes_cover_regions(spark, sf_correct):
     stats = {r.region: r for r in regions.region_stats(labeled).collect()}
     rows = feats.collect()
     assert len(rows) == len(stats)
+    assert all(r.wkt.startswith("POLYGON((") for r in rows)
     layer = vector.polygons_from_wkt(
         feats.select(F.col("region").alias("zone_id"), "wkt")
     ).collect()
@@ -306,6 +335,7 @@ def test_focal_radius2_vs_numpy_and_chunk_invariance(spark, sf_correct):
         got = {(r.y, r.x): r.value_avg for r in tiling.tiles_to_coo(means, "value_avg").collect()}
         outs.append(got)
     assert outs[0] == outs[1]
+    assert len(outs[0]) == n
     for (y, x), v in outs[0].items():
         assert abs(v - want[y, x]) < 1e-12
     # h=100, chunk=33 -> ragged edge tile spans 1 cell < radius 2
@@ -331,6 +361,22 @@ def test_zonal_mode_vs_numpy(spark, sf_correct):
         best = counts.max()
         want_v = vals[counts == best].min()  # tie -> smaller value
         assert got[int(zid)] == (int(want_v), int(best))
+
+
+def test_zonal_variance_vs_numpy(spark, tiles, dense):
+    """Population variance and stddev per zone (nodata zone included)
+    equal NumPy's over the mixed rect/poly zones."""
+    h, w = dense.shape
+    zt = zonal.rasterize_polygons(spark, fixtures.MIXED_POLYGONS, h, w, CHUNK)
+    got = {r.id: r for r in zonal.zonal_variance(tiles, zt).collect()}
+    zones = fixtures.mixed_zone_numpy(h, w)
+    assert set(got) == {int(z) for z in np.unique(zones)}
+    for zid in np.unique(zones):
+        sel = dense[zones == zid]
+        r = got[int(zid)]
+        assert r.count_value == sel.size
+        assert abs(r.var_value - sel.var()) < 1e-9
+        assert abs(r.std_value - sel.std()) < 1e-9
 
 
 def test_transpose_involution(coo):
@@ -418,6 +464,7 @@ def test_raster_pyramid_cascades_exact_base_means(spark, sf_correct):
             k = (r["y"] // f, r["x"] // f)
             acc[k][0] += r["value"]
             acc[k][1] += 1
+        assert sum(k[0] == lv for k in got) == len(acc), lv
         for (y, x), (s, c) in acc.items():
             assert got[(lv, y, x)] == s / c, (lv, y, x)
     ds = {(1, r["y"], r["x"]): r["value_avg"] for r in pixel.downsample(coo, 2).collect()}
