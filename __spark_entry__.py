@@ -18,6 +18,7 @@ import zipfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:  # driver-side import when loaded by file path
@@ -96,17 +97,26 @@ def _raster_tiles(spark: SparkSession, sf_dir: str):
     return tiling.pack_tiles(coo, CHUNK, h, w), h, w
 
 
-def _zone_tiles(spark: SparkSession, sf_dir: str, polygons, h: int, w: int):
-    return zonal.rasterize_polygons(spark, polygons, h, w, CHUNK)
+def _rect_zone(h: int, w: int):
+    """Zone id of the fixtures.rect_grid_polygons layer on COO rows."""
+    return zonal.rect_zone(h, w, fixtures.ZONE_H, fixtures.ZONE_W)
 
 
-def _zone_tiles_rect(spark: SparkSession, sf_dir: str, h: int, w: int):
-    """The fixtures.rect_grid_polygons layer via the JVM fast path —
-    bit-identical zone tiles (pinned by tests) without the Python
-    rasterize stage; arbitrary-polygon layers keep _zone_tiles."""
-    return zonal.rasterize_rect_grid(
-        spark, h, w, CHUNK, fixtures.ZONE_H, fixtures.ZONE_W
+def _rect_cells(coo: DataFrame, h: int, w: int, *cols: str) -> DataFrame:
+    """Zoned cells (id, *cols, v) of a COO raster under the rect-grid
+    layer: the zone id is arithmetic on each row — no zone tiles, no
+    join (polygon layers keep zone tiles)."""
+    return coo.select(_rect_zone(h, w).alias("id"), *cols, F.col("value").alias("v"))
+
+
+def _rect_zones_coo(spark: SparkSession, h: int, w: int) -> DataFrame:
+    """The rect-grid layer as a zone COO (y, x, id), one row per cell:
+    the zone relation the join-algorithm queries (broadcast, sort-merge,
+    IVM, reclass) exist to exercise."""
+    cells = spark.range(h * w).select(
+        F.expr(f"id DIV {w}").alias("y"), (F.col("id") % w).alias("x")
     )
+    return cells.select("y", "x", _rect_zone(h, w).alias("id"))
 
 
 # ---------------------------------------------------------------------------
@@ -436,14 +446,14 @@ def q_redimension_roundtrip_3d(spark, sf_dir):
 
 
 def q_zonal_stats_rect(spark, sf_dir):
-    tiles, h, w = _raster_tiles(spark, sf_dir)
-    zt = _zone_tiles_rect(spark, sf_dir, h, w)
-    return zonal.zonal_stats_tiles(tiles, zt)
+    h, w = model.raster_dims(spark, sf_dir)
+    cells = _rect_cells(model.raster_coo(spark, sf_dir), h, w)
+    return zonal.zonal_stats(cells, ["id"])
 
 
 def q_zonal_stats_poly(spark, sf_dir):
     tiles, h, w = _raster_tiles(spark, sf_dir)
-    zt = _zone_tiles(spark, sf_dir, fixtures.MIXED_POLYGONS, h, w)
+    zt = zonal.rasterize_polygons(spark, fixtures.MIXED_POLYGONS, h, w, CHUNK)
     return zonal.zonal_stats_tiles(tiles, zt)
 
 
@@ -520,24 +530,20 @@ def q_gaussian_blur(spark, sf_dir):
 
 def q_zonal_stats_time(spark, sf_dir):
     """Temporal zonal stats: per-(zone, band) min/max/avg/count over the
-    3-D raster time series; ONE 2-D zone raster reused by every band's
-    chunks via the spatial tile key."""
+    3-D raster time series; the 2-D zone id is (y, x) arithmetic, so
+    every band reuses it."""
     from scidbgeo_spark.model import RASTER3_W
 
     coo3 = model.raster3_coo(spark, sf_dir)
     _, h3, _ = model.raster3_dims(spark, sf_dir)
-    tiles3 = tiling.pack_tiles_3d(coo3, CHUNK, h3, RASTER3_W)
-    zt = _zone_tiles_rect(spark, sf_dir, h3, RASTER3_W)
-    return zonal.zonal_stats_time(tiles3, zt)
+    return zonal.zonal_stats_time(_rect_cells(coo3, h3, RASTER3_W, "band"))
 
 
 def q_zonal_change(spark, sf_dir):
     """Per-zone CHANGE DETECTION between two time slices of the 3-D
-    array (band 1 - band 0): positional chunk join aligns the slices,
-    then the zonal aggregate summarizes the delta — the classic
+    array (band 1 - band 0): a positional join on (y, x) aligns the
+    slices, then the zonal aggregate summarizes the delta — the classic
     SciDB-style raster time-series analysis, zero extra machinery."""
-    from pyspark.sql import functions as F
-
     from scidbgeo_spark.model import RASTER3_W
 
     coo3 = model.raster3_coo(spark, sf_dir)
@@ -547,9 +553,7 @@ def q_zonal_change(spark, sf_dir):
     delta = a.alias("a").join(b.alias("b"), ["y", "x"]).select(
         "y", "x", (F.col("b.value") - F.col("a.value")).alias("value")
     )
-    tiles = tiling.pack_tiles(delta, CHUNK, h3, RASTER3_W)
-    zt = _zone_tiles_rect(spark, sf_dir, h3, RASTER3_W)
-    return zonal.zonal_stats_tiles(tiles, zt)
+    return zonal.zonal_stats(_rect_cells(delta, h3, RASTER3_W), ["id"])
 
 
 def q_traffic_spikes(spark, sf_dir):
@@ -632,11 +636,7 @@ def q_between_3d(spark, sf_dir):
 def q_zonal_stats_broadcast(spark, sf_dir):
     coo = model.raster_coo(spark, sf_dir)
     h, w = model.raster_dims(spark, sf_dir)
-    zt = _zone_tiles_rect(spark, sf_dir, h, w)
-    zones_coo = tiling.tiles_to_coo(
-        zt.withColumnRenamed("zid", "px"), "id"
-    )
-    return zonal.zonal_stats_broadcast(coo, zones_coo)
+    return zonal.zonal_stats_broadcast(coo, _rect_zones_coo(spark, h, w))
 
 
 def q_zonal_ivm(spark, sf_dir):
@@ -645,12 +645,9 @@ def q_zonal_ivm(spark, sf_dir):
     DELTA-SIZED work (broadcast zone join + merge join) — the base
     raster is never rescanned.  Oracle: the closed-form base+delta
     recompute."""
-    from pyspark.sql import functions as F
-
     coo = model.raster_coo(spark, sf_dir)
     h, w = model.raster_dims(spark, sf_dir)
-    zt = _zone_tiles_rect(spark, sf_dir, h, w)
-    zones_coo = tiling.tiles_to_coo(zt.withColumnRenamed("zid", "px"), "id")
+    zones_coo = _rect_zones_coo(spark, h, w)
     base = zonal.zonal_sums(coo, zones_coo)
     eid = F.col("y") * w + F.col("x")
     delta = coo.filter(eid % 97 == 0).select(
@@ -709,8 +706,7 @@ def q_colocation_pairs(spark, sf_dir):
 def q_join_reclass(spark, sf_dir):
     coo = model.raster_coo(spark, sf_dir)
     h, w = model.raster_dims(spark, sf_dir)
-    zt = _zone_tiles_rect(spark, sf_dir, h, w)
-    zones_coo = tiling.tiles_to_coo(zt.withColumnRenamed("zid", "px"), "id")
+    zones_coo = _rect_zones_coo(spark, h, w)
     return zonal.join_reclass(coo, zones_coo, target_zone=7, new_value=500)
 
 
@@ -925,32 +921,16 @@ def q_zonal_stats_sortmerge(spark, sf_dir):
     """Mode-2 analog: zone COO too big to replicate -> sort-merge join on
     the coordinate attributes (the reference's non-equi_join global-join
     path chooses this shape; we force the merge hint)."""
-    from pyspark.sql import functions as F
-
     coo = model.raster_coo(spark, sf_dir)
     h, w = model.raster_dims(spark, sf_dir)
-    zt = _zone_tiles_rect(spark, sf_dir, h, w)
-    zones_coo = tiling.tiles_to_coo(zt.withColumnRenamed("zid", "px"), "id").hint("merge")
-    return (
-        coo.join(zones_coo, ["y", "x"])
-        .groupBy("id")
-        .agg(
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.avg("value").alias("avg_value"),
-            F.count("value").alias("count_value"),
-        )
-        .withColumn("id", F.col("id").cast("long"))
-        .select("id", "min_value", "max_value", "avg_value", "count_value")
-    )
+    cells = coo.join(_rect_zones_coo(spark, h, w).hint("merge"), ["y", "x"])
+    return zonal.zonal_stats(cells.select("id", F.col("value").alias("v")), ["id"])
 
 
 def q_zonal_stats_float(spark, sf_dir):
     """Float-attribute raster (value = events.value, double): zonal
     min/max/count (exact for doubles; sums are order-dependent so the
     float path reports order-free stats)."""
-    from pyspark.sql import functions as F
-
     ev = model.load_table(spark, sf_dir, "events")
     coo = ev.select(
         F.expr("event_id DIV 100").alias("y"),
@@ -958,13 +938,7 @@ def q_zonal_stats_float(spark, sf_dir):
         F.col("value"),
     )
     h, w = model.raster_dims(spark, sf_dir)
-    tiles = tiling.pack_tiles(coo, CHUNK, h, w, int_values=False)
-    zt = _zone_tiles_rect(spark, sf_dir, h, w)
-    j = tiles.join(zt.select("tile_y", "tile_x", "zid"), ["tile_y", "tile_x"])
-    flat = j.select(F.explode(F.arrays_zip(F.col("zid"), F.col("px"))).alias("c")).select(
-        F.col("c.zid").cast("long").alias("id"), F.col("c.px").alias("v")
-    )
-    return flat.groupBy("id").agg(
+    return _rect_cells(coo, h, w).groupBy("id").agg(
         F.min("v").alias("min_value"),
         F.max("v").alias("max_value"),
         F.count("v").alias("count_value"),
@@ -973,18 +947,12 @@ def q_zonal_stats_float(spark, sf_dir):
 
 def q_zonal_median(spark, sf_dir):
     """Exact per-zone ORDERED statistics (median + p90) — Spark's exact
-    `percentile` aggregate over the zone join; interpolation matches
+    `percentile` aggregate over the zoned cells; interpolation matches
     DuckDB quantile_cont bitwise on integer inputs.  An aggregate class
     the reference's grouped_aggregate surface lacks."""
-    from pyspark.sql import functions as F
-
-    tiles, h, w = _raster_tiles(spark, sf_dir)
-    zt = _zone_tiles_rect(spark, sf_dir, h, w)
-    j = tiles.join(zt.select("tile_y", "tile_x", "zid"), ["tile_y", "tile_x"])
-    flat = j.select(F.explode(F.arrays_zip("zid", "px")).alias("c")).select(
-        F.col("c.zid").cast("long").alias("id"), F.col("c.px").alias("v")
-    )
-    return flat.groupBy("id").agg(
+    h, w = model.raster_dims(spark, sf_dir)
+    cells = _rect_cells(model.raster_coo(spark, sf_dir), h, w)
+    return cells.groupBy("id").agg(
         F.expr("percentile(v, 0.5)").alias("median_value"),
         F.expr("percentile(v, 0.9)").alias("p90_value"),
     )
@@ -994,53 +962,33 @@ def q_zonal_var(spark, sf_dir):
     """Per-zone exact population variance + stddev — all-integer sums
     with one closing division (and IEEE-exact sqrt), so the float
     results are bitwise across engines."""
-    tiles, h, w = _raster_tiles(spark, sf_dir)
-    zt = _zone_tiles_rect(spark, sf_dir, h, w)
-    return zonal.zonal_variance(tiles, zt)
+    h, w = model.raster_dims(spark, sf_dir)
+    return zonal.zonal_variance(_rect_cells(model.raster_coo(spark, sf_dir), h, w))
 
 
 def q_zonal_mode(spark, sf_dir):
     """Zonal MAJORITY (mode) per zone — the (zone, value) histogram
     shuffles as counts, one window picks the argmax."""
-    tiles, h, w = _raster_tiles(spark, sf_dir)
-    zt = _zone_tiles_rect(spark, sf_dir, h, w)
-    return zonal.zonal_mode(tiles, zt)
+    h, w = model.raster_dims(spark, sf_dir)
+    return zonal.zonal_mode(_rect_cells(model.raster_coo(spark, sf_dir), h, w))
 
 
 def q_zonal_histogram(spark, sf_dir):
     """Per-zone pixel-value HISTOGRAM (grouped_aggregate over (zone,
     value) — the distribution view of zonal statistics)."""
-    from pyspark.sql import functions as F
-
-    tiles, h, w = _raster_tiles(spark, sf_dir)
-    zt = _zone_tiles_rect(spark, sf_dir, h, w)
-    j = tiles.join(zt.select("tile_y", "tile_x", "zid"), ["tile_y", "tile_x"])
-    flat = j.select(F.explode(F.arrays_zip("zid", "px")).alias("c")).select(
-        F.col("c.zid").cast("long").alias("id"),
-        F.col("c.px").cast("long").alias("value"),
-    )
-    return flat.groupBy("id", "value").agg(F.count("*").alias("n"))
+    h, w = model.raster_dims(spark, sf_dir)
+    cells = _rect_cells(model.raster_coo(spark, sf_dir), h, w)
+    return cells.groupBy("id", F.col("v").alias("value")).agg(F.count("*").alias("n"))
 
 
 def q_zonal_stats_multi(spark, sf_dir):
     """Zonal statistics over a MULTI-ATTRIBUTE array (reference
-    arrayType == 2, SciDBParallel.py:55-83): one chunk table carrying two
+    arrayType == 2, SciDBParallel.py:55-83): each cell row carries two
     value attributes, aggregated per zone in a single pass — stats on
     attribute a, sum of attribute b."""
-    from pyspark.sql import functions as F
-
     coo = model.raster_coo_multi(spark, sf_dir)
     h, w = model.raster_dims(spark, sf_dir)
-    tiles = tiling.pack_tiles_multi(coo, CHUNK, h, w, ["va", "vb"])
-    zt = _zone_tiles_rect(spark, sf_dir, h, w)
-    j = tiles.join(zt.select("tile_y", "tile_x", "zid"), ["tile_y", "tile_x"])
-    flat = j.select(
-        F.explode(F.arrays_zip("zid", "px_va", "px_vb")).alias("c")
-    ).select(
-        F.col("c.zid").cast("long").alias("id"),
-        F.col("c.px_va").alias("va"),
-        F.col("c.px_vb").alias("vb"),
-    )
+    flat = coo.select(_rect_zone(h, w).alias("id"), "va", "vb")
     return flat.groupBy("id").agg(
         F.min("va").alias("min_a"),
         F.max("va").alias("max_a"),
@@ -2627,8 +2575,7 @@ def q_areal_interp(spark, sf_dir):
     vector-vector overlay direction (regions.areal_interpolate:
     covering-cell equi-join, never a cross join; one exact bigint sum
     divided once by the uniform source-zone area)."""
-    from pyspark.sql import functions as F
-
+    from scidbgeo_spark.kernels import NODATA_ZONE
     from scidbgeo_spark.operators import regions
 
     coo = model.raster_coo(spark, sf_dir)
@@ -2636,11 +2583,10 @@ def q_areal_interp(spark, sf_dir):
     zh, zw = fixtures.ZONE_H, fixtures.ZONE_W
     nzx, nzy = w // zw, h // zh
     a = (
-        coo.filter(F.col("y") < nzy * zh)
-        .groupBy(
-            (F.expr(f"y DIV {zh}") * nzx + F.expr(f"x DIV {zw}")).alias("zid_a")
-        )
-        .agg(F.sum("value").alias("value"))
+        _rect_cells(coo, h, w)
+        .filter(F.col("id") != NODATA_ZONE)
+        .groupBy(F.col("id").alias("zid_a"))
+        .agg(F.sum("v").alias("value"))
         .select(
             "zid_a",
             (F.expr(f"zid_a DIV {nzx}") * zh).alias("y0"),
@@ -2987,14 +2933,8 @@ def q_zonal_iqr(spark, sf_dir):
     """Per-zone exact quartiles + Tukey-fence outlier count: p25/p75 via
     the exact percentile aggregate, then one broadcast join-back of the
     tiny per-zone fence table to count pixels beyond 1.5 IQR."""
-    from pyspark.sql import functions as F
-
-    tiles, h, w = _raster_tiles(spark, sf_dir)
-    zt = _zone_tiles_rect(spark, sf_dir, h, w)
-    j = tiles.join(zt.select("tile_y", "tile_x", "zid"), ["tile_y", "tile_x"])
-    flat = j.select(F.explode(F.arrays_zip("zid", "px")).alias("c")).select(
-        F.col("c.zid").cast("long").alias("id"), F.col("c.px").alias("v")
-    )
+    h, w = model.raster_dims(spark, sf_dir)
+    flat = _rect_cells(model.raster_coo(spark, sf_dir), h, w)
     q = flat.groupBy("id").agg(
         F.expr("percentile(v, 0.25)").alias("p25"),
         F.expr("percentile(v, 0.75)").alias("p75"),
@@ -3052,10 +2992,10 @@ def q_time_weighted_avg(spark, sf_dir):
 # stricter value-hash gate; the r5-window block (terrain, ...) follows
 # with fresh r5 driver rows.  The demoted tail still has exact oracles,
 # checked each round by tools/check_oracle.py (artifact:
-# TAILCHECK_r{N}.json) + pytest.
+# history/TAILCHECK_r{N}.json) + pytest.
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- r6 window: late-r5 additions, never driver-checked before
-    # (tail rows only: TAILCHECK_r05.json); first 50 of these form the
+    # (tail rows only: history/TAILCHECK_r05.json); first 50 of these form the
     # r6 driver correctness window ---
     "max_drawdown": q_max_drawdown,
     "quantile_normalize": q_quantile_normalize,

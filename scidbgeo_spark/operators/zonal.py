@@ -5,17 +5,19 @@ rasterize polygons to a zone-id grid (gdal.RasterizeLayer), redimension it
 into a mask array aligned with the raster, positional-join raster x mask,
 then ``grouped_aggregate(min,max,avg,count by id)``.
 
-Spark-native re-expression:
+Spark-native re-expression: two front ends produce zoned cells
+``(id, v[, band])`` for one aggregate, :func:`zonal_stats`.
 
-1. **rasterize**: per-tile ray-cast kernel (mapInPandas over the tile
-   grid; polygons broadcast) -> zone tiles.  No GDAL.
-2. **join**: equi-join raster tiles x zone tiles on chunk keys — the
-   positional join collapses to chunk-granular join + array-index math.
-3. **partial aggregate before the shuffle**: each joined chunk emits at most
-   (#zones-in-chunk) rows of (id, min, max, sum, count) — the shuffle
-   carries per-(chunk,zone) partials, never pixels.  Same reason the
-   reference runs grouped_aggregate server-side.
-4. final ``groupBy(id)`` rollup; avg = sum/count (exact for int rasters).
+1. **rect-grid layer**: the zone id is integer arithmetic on the COO
+   rows (:func:`rect_zone`) — no rasterize, no zone tiles, no join
+   (Raptor, VLDB 2019: zonal statistics need no rasterized layer).
+2. **polygon layers**: a per-tile ray-cast kernel burns zone tiles;
+   :func:`zone_cells` equi-joins them to the raster tiles on chunk
+   keys — the positional join becomes chunk join + array-index math.
+
+The aggregate is partial before the shuffle, so the shuffle carries
+per-(task, zone) partials, never pixels — the reason the reference runs
+grouped_aggregate server-side.
 
 A broadcast COO variant mirrors the reference's
 ``equi_join(..., algorithm=hash_replicate_right)`` mode
@@ -29,11 +31,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from scidbgeo_spark import tiling
-from scidbgeo_spark.kernels import rasterize_tile
+from scidbgeo_spark.kernels import NODATA_ZONE, rasterize_tile
 from scidbgeo_spark.tiling import TILE_KEYS
 
 ZONE_TILE_SCHEMA = "tile_y int, tile_x int, y0 long, x0 long, h int, w int, zid array<int>"
@@ -72,6 +74,43 @@ def rasterize_polygons(
     return grid.mapInPandas(_rasterize, schema=ZONE_TILE_SCHEMA)
 
 
+def rect_zone(
+    height: int,
+    width: int,
+    zone_h: int,
+    zone_w: int,
+    y: Column | str = "y",
+    x: Column | str = "x",
+) -> Column:
+    """Zone id (BIGINT) of cell (y, x) in the FULL-GRID rectangle layer
+    ``fixtures.rect_grid_polygons`` / ``PolyPack.rect_grid`` — the
+    engine's one copy of the rect-grid rule.
+
+    Pixel centers sit at half-integers and rect edges at integers, so
+    ``points_in_ring``'s half-open [a,b)×[c,d) inclusion reduces exactly
+    to ``(y div zone_h) * nzx + (x div zone_w)`` inside the covered
+    extent, and NODATA_ZONE below the last full zone row or right of the
+    last full zone column (partial trailing zones are not part of the
+    layer).  Equal to the ray-cast kernel's zone tiles on ragged shapes
+    (pinned by tests) and to the oracle's ``_RECT_ZONE3`` CASE."""
+    y = F.col(y) if isinstance(y, str) else y
+    x = F.col(x) if isinstance(x, str) else x
+    nzx = width // zone_w
+    nzy = height // zone_h
+
+    def div(c: Column, k: int) -> Column:
+        return F.call_function("div", c, F.lit(k))
+
+    return (
+        F.when(
+            (y < nzy * zone_h) & (x < nzx * zone_w),
+            div(y, zone_h) * nzx + div(x, zone_w),
+        )
+        .otherwise(F.lit(NODATA_ZONE))
+        .cast("long")
+    )
+
+
 def rasterize_rect_grid(
     spark: SparkSession,
     height: int,
@@ -80,41 +119,36 @@ def rasterize_rect_grid(
     zone_h: int,
     zone_w: int,
 ) -> DataFrame:
-    """Zone tiles for an axis-aligned FULL-GRID rectangle layer, computed
-    entirely in whole-stage codegen — no Python rasterize stage.
+    """Zone tiles for the full-grid rectangle layer: :func:`rect_zone`
+    over every cell of each tile, in one higher-order ``transform`` (no
+    Python rasterize stage).
 
-    Bit-identical to ``rasterize_polygons(rect_grid_polygons(h, w))``
-    (pinned by tests): pixel centers sit at half-integers and rect edges
-    at integers, so ``points_in_ring``'s half-open [a,b)×[c,d) inclusion
-    reduces exactly to the integer arithmetic
-    ``zid = (y div zone_h) * nzx + (x div zone_w)`` within the covered
-    extent and NODATA_ZONE outside (partial trailing zones are not part
-    of the layer).  For the general polygon case the ray-cast kernel
-    path stays; this fast path exists because a regular zone grid is the
-    common "states/counties over a continental raster" layer and the
-    mapInPandas invocation floor (~0.3 s at 32 tasks) is pure overhead
-    for what is one codegen expression (guide §4.1: built-ins over
-    UDFs)."""
-    from scidbgeo_spark.kernels import NODATA_ZONE
-
-    nzx = width // zone_w
-    nzy = height // zone_h
+    No query takes this path — rect-grid zonal queries put
+    :func:`rect_zone` on their COO rows instead.  It is kept for the
+    kernel-parity test (bit-identical to
+    ``rasterize_polygons(rect_grid_polygons(h, w))``) and for
+    perfbench's traced ``zonal.rasterize_rect_s`` span."""
     grid = tiling.tile_grid(spark, height, width, chunk)
-    zid = (
-        f"transform(sequence(0, h * w - 1), i -> CAST("
-        f"CASE WHEN x0 + i % w < {nzx * zone_w} AND y0 + i DIV w < {nzy * zone_h} "
-        f"THEN ((y0 + i DIV w) DIV {zone_h}) * {nzx} + ((x0 + i % w) DIV {zone_w}) "
-        f"ELSE {NODATA_ZONE} END AS INT))"
-    )
-    return grid.withColumn("zid", F.expr(zid))
+    cells = F.sequence(F.lit(0), F.col("h") * F.col("w") - 1)
+
+    def zid(i: Column) -> Column:
+        y = F.col("y0") + F.call_function("div", i, F.col("w"))
+        x = F.col("x0") + i % F.col("w")
+        return rect_zone(height, width, zone_h, zone_w, y, x).cast("int")
+
+    return grid.withColumn("zid", F.transform(cells, zid))
 
 
-def _zonal_agg(flat: DataFrame, keys: list[str]) -> DataFrame:
-    """Shared stats tail: codegen hash aggregate + the exact avg = sum /
-    count division, grouped by ``keys`` — the 2-D (zone) and 3-D (zone,
-    band) paths must never drift in column names or avg semantics."""
+def zonal_stats(cells: DataFrame, keys: list[str]) -> DataFrame:
+    """(keys..., min_value, max_value, avg_value, count_value) over
+    zoned cells ``(keys..., v)``: one codegen hash aggregate (map-side
+    partials, so the shuffle carries one row per task x group) and the
+    exact avg = sum / count division.  Output schema matches the printed
+    header "geoid, min, max, average, count" (scidb.py:64); the 2-D
+    (zone) and 3-D (zone, band) forms share it, so they never drift in
+    column names or avg semantics."""
     return (
-        flat.groupBy(*keys)
+        cells.groupBy(*keys)
         .agg(
             F.min("v").alias("min_value"),
             F.max("v").alias("max_value"),
@@ -131,45 +165,50 @@ def _zonal_agg(flat: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def zonal_stats_tiles(raster_tiles: DataFrame, zone_tiles: DataFrame) -> DataFrame:
-    """Chunk-join + cellwise zip + codegen hash aggregate (all JVM).
+def zone_cells(raster_tiles: DataFrame, zone_tiles: DataFrame) -> DataFrame:
+    """Zoned cells ``(id, v[, band])`` of a raster under a zone-tile
+    layer: the polygon-layer front end of every zonal operator.
 
-    The positional join is an equi-join at chunk granularity; cell
-    alignment is ``arrays_zip`` (array-index math, no per-cell join).  The
-    explode feeds Spark's partial hash aggregate, so the shuffle carries
-    one (zone, min, max, sum, count) row per task x zone — the same
-    pixels-never-leave effect the reference gets by running
-    grouped_aggregate server-side (SciDBParallel.py:700-706).  Output
-    schema matches the printed header "geoid, min, max, average, count"
-    (scidb.py:64).  No Arrow transfer, so it scales with cores."""
+    The positional join is an equi-join at chunk granularity (a 3-D
+    raster's every band joins the one 2-D zone raster by the spatial
+    tile key, so the band dimension never inflates the rasterize cost);
+    cell alignment is array-index math.  posexplode + O(1) element_at
+    beats arrays_zip-then-explode: the zip materializes a 65k-struct
+    array per tile before generating, while this generates straight off
+    the px array and indexes the (by-reference) zid array per row inside
+    codegen.  Integral px (stored array<int>) surface as BIGINT so the
+    stats schemas are type-stable; float rasters keep their double
+    type."""
+    band = ["band"] if "band" in raster_tiles.columns else []
     zt = zone_tiles.select(*TILE_KEYS, "zid")
-    j = raster_tiles.join(zt, TILE_KEYS)
-    # posexplode + O(1) element_at beats arrays_zip-then-explode: the zip
-    # materializes a 65k-struct array per tile before generating, while
-    # this generates straight off the px array and indexes the (cached,
-    # by-reference) zid array per row inside codegen — ~25% less
-    # join-phase time at sf-bench scale, same rows out
-    e = j.select("zid", F.posexplode("px").alias("pos", "v"))
-    # integral px (stored array<int>) aggregates as BIGINT so the public
-    # stats schema is type-stable; float rasters keep their double type
+    e = raster_tiles.join(zt, TILE_KEYS).select(
+        *band, "zid", F.posexplode("px").alias("pos", "v")
+    )
     elem = raster_tiles.schema["px"].dataType.elementType.simpleString()
     v = (
         F.col("v").cast("long")
         if elem in ("tinyint", "smallint", "int", "bigint")
         else F.col("v")
     )
-    flat = e.select(
+    return e.select(
         F.element_at("zid", F.col("pos") + 1).cast("long").alias("id"),
+        *band,
         v.alias("v"),
     )
-    return _zonal_agg(flat, ["id"])
 
 
-def zonal_variance(raster_tiles: DataFrame, zone_tiles: DataFrame) -> DataFrame:
-    """(id, var_value, std_value, count_value): exact population variance
-    per zone via the all-integer identity (c*Σv² − (Σv)²) / c², with the
-    sums carried in DECIMAL(38,0) — the analogue of DuckDB's HUGEINT
-    sum widening.  BIGINT sums would silently wrap: two int32-extreme
+def zonal_stats_tiles(raster_tiles: DataFrame, zone_tiles: DataFrame) -> DataFrame:
+    """Zonal statistics of a raster under a zone-tile layer (all JVM):
+    :func:`zone_cells` then :func:`zonal_stats`.  No Arrow transfer, so
+    it scales with cores."""
+    return zonal_stats(zone_cells(raster_tiles, zone_tiles), ["id"])
+
+
+def zonal_variance(cells: DataFrame) -> DataFrame:
+    """(id, var_value, std_value, count_value) over zoned cells (id, v):
+    exact population variance per zone via the all-integer identity
+    (c*Σv² − (Σv)²) / c², with the sums carried in DECIMAL(38,0) — the
+    analogue of DuckDB's HUGEINT sum widening.  BIGINT sums would silently wrap: two int32-extreme
     cells already push Σv² past 2^63 (r3 advice).  Exactness domain:
     per-cell v² ≤ 2^62 needs pixels within int32 (the tile int_values
     contract), and c·Σv² < 10^38 holds for zones up to ~4.7e9 cells even
@@ -178,18 +217,12 @@ def zonal_variance(raster_tiles: DataFrame, zone_tiles: DataFrame) -> DataFrame:
     errors — loud on both engines, never silent corruption.  The single
     closing division (and IEEE-exact sqrt) is bitwise reproducible
     across partitionings and engines.  Same single-shuffle shape as
-    zonal_stats_tiles."""
+    zonal_stats."""
     dec = "decimal(38,0)"
-    zt = zone_tiles.select(*TILE_KEYS, "zid")
-    j = raster_tiles.join(zt, TILE_KEYS)
-    e = j.select("zid", F.posexplode("px").alias("pos", "v"))
-    flat = e.select(
-        F.element_at("zid", F.col("pos") + 1).cast("long").alias("id"),
-        F.col("v").cast("long").alias("v"),
-    )
-    g = flat.groupBy("id").agg(
-        F.sum(F.col("v").cast(dec)).alias("s"),
-        F.sum((F.col("v") * F.col("v")).cast(dec)).alias("ss"),
+    v = F.col("v").cast("long")
+    g = cells.groupBy("id").agg(
+        F.sum(v.cast(dec)).alias("s"),
+        F.sum((v * v).cast(dec)).alias("ss"),
         F.count("v").alias("c"),
     )
     cd = F.col("c").cast(dec)
@@ -203,21 +236,14 @@ def zonal_variance(raster_tiles: DataFrame, zone_tiles: DataFrame) -> DataFrame:
     )
 
 
-def zonal_mode(raster_tiles: DataFrame, zone_tiles: DataFrame) -> DataFrame:
-    """(id, mode_value, n_pixels): the MAJORITY pixel value per zone (the
-    GIS "zonal majority" statistic), deterministic ties broken toward the
-    smaller value.  Same chunk-join + posexplode front end as
-    zonal_stats_tiles; the (zone, value) histogram shuffles as counts
-    (map-side partials), then one per-zone window picks the argmax — the
-    full pixel stream never reaches the window."""
-    zt = zone_tiles.select(*TILE_KEYS, "zid")
-    j = raster_tiles.join(zt, TILE_KEYS)
-    e = j.select("zid", F.posexplode("px").alias("pos", "v"))
-    flat = e.select(
-        F.element_at("zid", F.col("pos") + 1).cast("long").alias("id"),
-        F.col("v").cast("long").alias("v"),
-    )
-    counts = flat.groupBy("id", "v").agg(F.count("*").alias("n"))
+def zonal_mode(cells: DataFrame) -> DataFrame:
+    """(id, mode_value, n_pixels) over zoned cells (id, v): the MAJORITY
+    pixel value per zone (the GIS "zonal majority" statistic),
+    deterministic ties broken toward the smaller value.  The (zone,
+    value) histogram shuffles as counts (map-side partials), then one
+    per-zone window picks the argmax — the full pixel stream never
+    reaches the window."""
+    counts = cells.groupBy("id", "v").agg(F.count("*").alias("n"))
     win = Window.partitionBy("id").orderBy(F.desc("n"), F.asc("v"))
     return (
         counts.withColumn("rk", F.row_number().over(win))
@@ -231,18 +257,10 @@ def zonal_stats_broadcast(raster_coo: DataFrame, zones_coo: DataFrame) -> DataFr
     (SciDB_ZonalStats_CL.py:290-328): zone COO stays 'vector-shaped'
     (never redimensioned), broadcast to every task, value-based join on
     the named coordinate attributes."""
-    return (
-        raster_coo.join(F.broadcast(zones_coo), ["y", "x"])
-        .groupBy("id")
-        .agg(
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.avg("value").alias("avg_value"),
-            F.count("value").alias("count_value"),
-        )
-        .withColumn("id", F.col("id").cast("long"))
-        .select("id", "min_value", "max_value", "avg_value", "count_value")
+    cells = raster_coo.join(F.broadcast(zones_coo), ["y", "x"]).select(
+        F.col("id").cast("long").alias("id"), F.col("value").alias("v")
     )
+    return zonal_stats(cells, ["id"])
 
 
 def join_reclass(
@@ -267,34 +285,17 @@ def join_reclass(
     )
 
 
-def zonal_stats_time(raster3_tiles: DataFrame, zone_tiles: DataFrame) -> DataFrame:
-    """Temporal zonal statistics: per-(zone, band) stats over a 3-D
-    raster time series — the SciDB "zonal stats over every time slice"
-    workload ([band;y;x] arrays, SciDBParallel.py:188-192), one query
-    instead of a per-slice loop.
+def zonal_stats_time(cells: DataFrame) -> DataFrame:
+    """Temporal zonal statistics: per-(zone, band) stats over zoned
+    cells (id, band, v) of a 3-D raster time series — the SciDB "zonal
+    stats over every time slice" workload ([band;y;x] arrays,
+    SciDBParallel.py:188-192), one query instead of a per-slice loop.
 
-    Scale shape: ONE 2-D zone raster joins every band's chunks by the
-    spatial tile key alone (the zone layer is rasterized once and
-    reused across all time slices — the band dimension never inflates
-    the rasterize cost), then the same posexplode -> codegen hash
-    aggregate as zonal_stats_tiles, grouped by (zone, band).  The
-    shuffle carries one row per task x zone x band; pixels never leave
-    their scan task."""
-    zt = zone_tiles.select(*TILE_KEYS, "zid")
-    j = raster3_tiles.join(zt, TILE_KEYS)
-    e = j.select("band", "zid", F.posexplode("px").alias("pos", "v"))
-    elem = raster3_tiles.schema["px"].dataType.elementType.simpleString()
-    v = (
-        F.col("v").cast("long")
-        if elem in ("tinyint", "smallint", "int", "bigint")
-        else F.col("v")
-    )
-    flat = e.select(
-        F.element_at("zid", F.col("pos") + 1).cast("long").alias("id"),
-        F.col("band").cast("int").alias("band"),
-        v.alias("v"),
-    )
-    return _zonal_agg(flat, ["id", "band"])
+    The zone layer is resolved once for every band (the zone id depends
+    on (y, x) alone), then the same codegen hash aggregate as
+    zonal_stats, grouped by (zone, band).  The shuffle carries one row
+    per task x zone x band; pixels never leave their scan task."""
+    return zonal_stats(cells.withColumn("band", F.col("band").cast("int")), ["id", "band"])
 
 
 def rasterize_layer_df(
@@ -435,21 +436,14 @@ def zonal_weighted(coo_multi: DataFrame, h: int, w: int, zh: int = 20, zw: int =
     weighted by band vb per rectangular zone.  wavg = sum(va*vb) /
     sum(vb) with exact long numerator/denominator and ONE final
     division (NULL where the zone's weight mass is zero, identical
-    CASE on both engines).  Ragged bottom rows fall into the -999
-    catch-all zone like zonal_stats_rect.
+    CASE on both engines).  Cells outside the full zone grid fall into
+    the -999 catch-all zone (:func:`rect_zone`) like zonal_stats_rect.
 
     Scale shape: both bands ride the SAME row (the multi-attribute COO
     — no second raster join), the zone id is closed-form column
     algebra, and the whole operator is ONE map-side-combinable
     groupBy."""
-    nzx = w // zw
-    full_rows = (h // zh) * zh
-    zone = (
-        F.when(F.col("y") >= full_rows, F.lit(-999))
-        .otherwise(F.expr(f"(y DIV {zh}) * {nzx} + (x DIV {zw})"))
-        .cast("long")
-    )
-    g = coo_multi.groupBy(zone.alias("id")).agg(
+    g = coo_multi.groupBy(rect_zone(h, w, zh, zw).alias("id")).agg(
         F.sum(F.col("va") * F.col("vb")).alias("wsum"),
         F.sum("vb").alias("wtot"),
         F.count("*").alias("n"),
@@ -467,19 +461,15 @@ def zonal_argmax(coo: DataFrame, h: int, w: int, zh: int = 20, zw: int = 20) -> 
     """HOTSPOT LOCATION per zone — the zonal family's argmax: not just
     the max value (zonal_stats has it) but WHERE it is, under the exact
     (max value, then min y, then min x) tie rule: one row per rect-grid
-    zone (id, max_value, max_y, max_x).  Rows below the last full zone
-    band fold into the -999 nodata zone, same as the rasterized layer.
+    zone (id, max_value, max_y, max_x).  Cells outside the full zone
+    grid fold into the -999 nodata zone, same as the rasterized layer.
 
     Scale shape: one map-side-combinable struct-max aggregate keyed by
     the ARITHMETIC zone id — no zone layer join at all for rect grids
     (the layer IS the arithmetic); the struct packs (v, -y, -x) so the
     combiner resolves ties without a second pass."""
-    nzx = w // zw
-    full = (h // zh) * zh
-    zone = F.when(F.col("y") >= full, F.lit(-999).cast("long")).otherwise(
-        F.expr(f"y DIV {zh}") * nzx + F.expr(f"x DIV {zw}")
-    )
-    m = coo.select(zone.alias("id"), "y", "x", "value").groupBy("id").agg(
+    zone = rect_zone(h, w, zh, zw).alias("id")
+    m = coo.select(zone, "y", "x", "value").groupBy("id").agg(
         F.max(
             F.struct(
                 F.col("value").alias("v"),

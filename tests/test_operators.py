@@ -38,11 +38,18 @@ def test_raster_derivation(coo, dense):
         assert dense[r.y, r.x] == r.value
 
 
-def test_pack_unpack_roundtrip(tiles, coo):
+def test_pack_unpack_roundtrip(tiles, coo, dense):
     back = tiling.tiles_to_coo(tiles)
     a = {(r.y, r.x): r.value for r in back.collect()}
     b = {(r.y, r.x): r.value for r in coo.collect()}
     assert a == b
+    # double payloads take the struct-sort path (int_values=False)
+    h, w = dense.shape
+    fcoo = coo.select("y", "x", (F.col("value") / 7).alias("value"))
+    fback = tiling.tiles_to_coo(tiling.pack_tiles(fcoo, CHUNK, h, w, int_values=False))
+    assert {(r.y, r.x): r.value for r in fback.collect()} == {
+        (r.y, r.x): r.value for r in fcoo.collect()
+    }
 
 
 def test_tile_shapes_ragged_edges(tiles, dense):
@@ -351,7 +358,10 @@ def test_zonal_mode_vs_numpy(spark, sf_correct):
     h, w = model.raster_dims(spark, sf_correct)
     tiles = tiling.pack_tiles(coo, CHUNK, h, w)
     zt = zonal.rasterize_polygons(spark, fixtures.MIXED_POLYGONS, h, w, CHUNK)
-    got = {r.id: (r.mode_value, r.n_pixels) for r in zonal.zonal_mode(tiles, zt).collect()}
+    got = {
+        r.id: (r.mode_value, r.n_pixels)
+        for r in zonal.zonal_mode(zonal.zone_cells(tiles, zt)).collect()
+    }
     n = h * w
     dense = ((np.arange(n, dtype=np.int64) * VALUE_MULT) % VALUE_MOD).reshape(h, w)
     zones = fixtures.mixed_zone_numpy(h, w)
@@ -368,7 +378,7 @@ def test_zonal_variance_vs_numpy(spark, tiles, dense):
     equal NumPy's over the mixed rect/poly zones."""
     h, w = dense.shape
     zt = zonal.rasterize_polygons(spark, fixtures.MIXED_POLYGONS, h, w, CHUNK)
-    got = {r.id: r for r in zonal.zonal_variance(tiles, zt).collect()}
+    got = {r.id: r for r in zonal.zonal_variance(zonal.zone_cells(tiles, zt)).collect()}
     zones = fixtures.mixed_zone_numpy(h, w)
     assert set(got) == {int(z) for z in np.unique(zones)}
     for zid in np.unique(zones):
@@ -398,7 +408,7 @@ def test_zonal_variance_int32_extreme_no_overflow(spark):
     )
     tiles = tiling.pack_tiles(coo, 2, 2, 2)
     zt = zonal.rasterize_polygons(spark, PolyPack.rect_grid(2, 2, 2, 2), 2, 2, 2)
-    row = zonal.zonal_variance(tiles, zt).collect()[0]
+    row = zonal.zonal_variance(zonal.zone_cells(tiles, zt)).collect()[0]
     assert row.count_value == 4
     # s = 2*big, ss = 4*big^2 (~1.8e19 > int64 max), var = 12*big^2/16
     assert row.var_value == pytest.approx(0.75 * big * big, rel=1e-12)
@@ -420,7 +430,7 @@ def test_zonal_stats_time_matches_per_band_2d(spark, sf_correct):
     )
     got = {
         (r["id"], r["band"]): (r["min_value"], r["max_value"], r["avg_value"], r["count_value"])
-        for r in zonal.zonal_stats_time(tiles3, zt).collect()
+        for r in zonal.zonal_stats_time(zonal.zone_cells(tiles3, zt)).collect()
     }
     for b in range(bands):
         t2 = tiling.pack_tiles(px.slice_band(coo3, b), CHUNK, h3, w3)
@@ -1536,34 +1546,47 @@ def test_gaussian_blur_separable_equals_direct_numpy(spark):
 
 
 def test_zonal_weighted_vs_python_and_zero_mass(spark):
-    """Weighted zonal mean matches a python fold; a zone whose weight
-    mass is zero yields NULL wavg (no division blow-up)."""
-    from scidbgeo_spark.operators import zonal as Z
-
+    """Weighted zonal mean and zonal argmax match a python fold over the
+    ray-cast kernel's zone ids; a zone whose weight mass is zero yields
+    NULL wavg (no division blow-up).  At h=45, w=50 the zone size (20)
+    divides neither side: cells below the last full zone row or right
+    of the last full zone column are -999, never the next zone row."""
+    h, w = 45, 50
     rows = []
-    for y in range(45):  # h=45: rows 40-44 are the ragged -999 tail
-        for x in range(40):
-            va = (y * 40 + x) * 7 % 50
+    for y in range(h):
+        for x in range(w):
+            va = (y * w + x) * 7 % 50
             vb = 0 if (y < 20 and x < 20) else (y + x) % 9
             rows.append((y, x, va, vb))
     coo = spark.createDataFrame(rows, "y long, x long, va long, vb long")
-    got = {
-        r.id: (r.wsum, r.wtot, r.n, r.wavg)
-        for r in Z.zonal_weighted(coo, 45, 40).collect()
+    zt = zonal.rasterize_polygons(spark, fixtures.rect_grid_polygons(h, w), h, w, CHUNK)
+    zone = {
+        (r.y, r.x): r.id
+        for r in tiling.tiles_to_coo(zt.withColumnRenamed("zid", "px"), "id").collect()
     }
-    agg = {}
+    agg, best = {}, {}
     for y, x, va, vb in rows:
-        zid = -999 if y >= 40 else (y // 20) * 2 + (x // 20)
+        zid = zone[(y, x)]
         s = agg.setdefault(zid, [0, 0, 0])
         s[0] += va * vb
         s[1] += vb
         s[2] += 1
+        best[zid] = max(best.get(zid, (va, -y, -x)), (va, -y, -x))
+    got = {
+        r.id: (r.wsum, r.wtot, r.n, r.wavg)
+        for r in zonal.zonal_weighted(coo, h, w).collect()
+    }
     expect = {
         z: (s[0], s[1], s[2], (s[0] / s[1]) if s[1] > 0 else None)
         for z, s in agg.items()
     }
     assert got == expect
     assert got[0][3] is None  # the all-zero-weight zone
+    got = {
+        r.id: (r.max_value, -r.max_y, -r.max_x)
+        for r in zonal.zonal_argmax(coo.withColumnRenamed("va", "value"), h, w).collect()
+    }
+    assert got == best
 
 
 def test_matmul_coo_vs_numpy(spark):
@@ -1619,13 +1642,15 @@ def test_rasterize_rect_grid_jvm_matches_kernel_path(spark):
     bit-identical to the ray-cast kernel on rasterize_polygons — tile
     keys, geometry columns, and every zid element, including rasters
     whose extent does not divide evenly by the zone size (trailing
-    pixels burn to the nodata zone on both paths)."""
+    pixels burn to the nodata zone on both paths).  The shared rule,
+    rect_zone over every (y, x), equals the kernel tiles unpacked."""
     for h, w, ch in [(100, 100, 50), (130, 97, 50), (45, 60, 32), (20, 20, 50)]:
+        kernel = zonal.rasterize_polygons(
+            spark, fixtures.rect_grid_polygons(h, w), h, w, ch
+        )
         want = {
             (r.tile_y, r.tile_x, r.y0, r.x0, r.h, r.w): list(r.zid)
-            for r in zonal.rasterize_polygons(
-                spark, fixtures.rect_grid_polygons(h, w), h, w, ch
-            ).collect()
+            for r in kernel.collect()
         }
         got = {
             (r.tile_y, r.tile_x, r.y0, r.x0, r.h, r.w): list(r.zid)
@@ -1634,3 +1659,13 @@ def test_rasterize_rect_grid_jvm_matches_kernel_path(spark):
             ).collect()
         }
         assert got == want, (h, w, ch)
+        cells = spark.range(h * w).select(
+            F.expr(f"id DIV {w}").alias("y"), (F.col("id") % w).alias("x")
+        )
+        zone = zonal.rect_zone(h, w, fixtures.ZONE_H, fixtures.ZONE_W)
+        got = {(r.y, r.x): r.id for r in cells.select("y", "x", zone.alias("id")).collect()}
+        want = {
+            (r.y, r.x): r.id
+            for r in tiling.tiles_to_coo(kernel.withColumnRenamed("zid", "px"), "id").collect()
+        }
+        assert got == want, (h, w)

@@ -18,7 +18,12 @@ _PYTHON_NODE = re.compile(r"Python|Pandas|InArrow")
 
 # query -> (Exchange nodes, Python nodes, jobs during build)
 PINS = {
-    "zonal_stats_rect": (3, 0, 4),
+    # 1 Exchange (was 3): the zone id is rect_zone arithmetic on the COO
+    # rows, so no tiles are packed and no zone-tile join runs; the one
+    # shuffle is the aggregate's.  bench.py's north metric divides
+    # tiles+pages by this query's seconds, and it now builds no tiles:
+    # a bench.py figure across this change compares two algorithms.
+    "zonal_stats_rect": (1, 0, 4),
     "zonal_stats_poly": (3, 1, 4),
     "pip_grid": (2, 1, 1),
     "pip_grid_salted": (6, 1, 1),

@@ -3,7 +3,7 @@ on Spark and its oracle_sql() twin on DuckDB at sf0.01 (or $SF_DIR), then
 compare row counts, column names, and exact sorted values.
 
 Usage: python tools/check_oracle.py [query ...]
-       python tools/check_oracle.py --tail --out TAILCHECK_r04.json
+       python tools/check_oracle.py --tail --out history/TAILCHECK_r04.json
 
 ``--tail`` checks only the registry entries OUTSIDE the driver's first-50
 correctness window; ``--out`` additionally writes a JSON artifact so the

@@ -263,7 +263,7 @@ def temporal_smoke(spark, bands: int = 8, h: int = 2048, chunk: int = 256) -> di
     tiles3 = tiling.pack_tiles_3d(coo3, chunk, h, w)
     pack = PolyPack.rect_grid(h, w, 64, 64)
     zt = zonal.rasterize_polygons(spark, pack, h, w, chunk)
-    rows = zonal.zonal_stats_time(tiles3, zt).collect()
+    rows = zonal.zonal_stats_time(zonal.zone_cells(tiles3, zt)).collect()
     total = sum(r.count_value for r in rows)
     n_bands_seen = len({r.band for r in rows})
     # change detection: band 3 minus itself must be all-zero per zone
