@@ -40,8 +40,8 @@ def run_zonal(spark, sf_dir: str, chunk: int, run: int, stats_csv: str | None) -
     h, w = model.raster_dims(spark, sf_dir)
 
     t0 = time.time()
-    zones = zonal.rasterize_polygons(
-        spark, fixtures.rect_grid_polygons(h, w), h, w, chunk
+    zones = zonal.rasterize_rect_grid(
+        spark, h, w, chunk, fixtures.ZONE_H, fixtures.ZONE_W
     ).cache()
     zones.count()
     rasterize_time = time.time() - t0

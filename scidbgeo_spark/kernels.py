@@ -187,9 +187,7 @@ class PolyPack:
 
     __slots__ = ("zids", "bbox", "offsets", "coords")
 
-    def __init__(self, polygons: list[tuple[int, np.ndarray]] | None):
-        if polygons is None:  # fields assigned by a factory
-            return
+    def __init__(self, polygons: list[tuple[int, np.ndarray]]):
         self.zids = np.array([z for z, _ in polygons], dtype=np.int64)
         rings = [np.asarray(r, dtype=np.float64) for _, r in polygons]
         self.offsets = np.zeros(len(rings) + 1, dtype=np.int64)
@@ -201,29 +199,6 @@ class PolyPack:
             [[r[:, 0].min(), r[:, 1].min(), r[:, 0].max(), r[:, 1].max()] for r in rings],
             dtype=np.float64,
         ).reshape(len(rings), 4)
-
-    @classmethod
-    def rect_grid(cls, height: int, width: int, zone_h: int, zone_w: int) -> "PolyPack":
-        """Vectorized construction of the rect-grid zone layer (the dense
-        many-small-zones case where a per-polygon Python loop would be the
-        serial driver-side bottleneck).  Identical to
-        PolyPack(fixtures.rect_grid_polygons(h, w))."""
-        nzy, nzx = height // zone_h, width // zone_w
-        n = nzy * nzx
-        ry, rx = np.divmod(np.arange(n, dtype=np.int64), nzx)
-        x0, y0 = rx * zone_w, ry * zone_h
-        x1, y1 = x0 + zone_w, y0 + zone_h
-        p = cls(None)
-        p.zids = np.arange(n, dtype=np.int64)
-        p.bbox = np.stack([x0, y0, x1, y1], axis=1).astype(np.float64)
-        p.offsets = np.arange(n + 1, dtype=np.int64) * 4
-        coords = np.empty((n, 4, 2), dtype=np.float64)
-        coords[:, 0, 0], coords[:, 0, 1] = x0, y0
-        coords[:, 1, 0], coords[:, 1, 1] = x1, y0
-        coords[:, 2, 0], coords[:, 2, 1] = x1, y1
-        coords[:, 3, 0], coords[:, 3, 1] = x0, y1
-        p.coords = coords.reshape(n * 4, 2)
-        return p
 
     def ring(self, i: int) -> np.ndarray:
         return self.coords[self.offsets[i] : self.offsets[i + 1]]

@@ -137,16 +137,24 @@ def dedup_exact(corpus: DataFrame) -> DataFrame:
     """Exact dedup by content hash: one row per distinct text with the
     kept (minimum) id and the group size.
 
-    The hash is ENGINE-INTERNAL (only keep_id / n_copies leave the
+    The key is ENGINE-INTERNAL (only keep_id / n_copies leave the
     operator; the oracle's ``GROUP BY md5(text)`` is likewise just a
-    grouping key for text equality), so it uses native ``xxhash64``
-    instead of md5 — same groups for equal texts, ~10x less hashing CPU
-    on the full corpus scan, collision exposure ~n^2/2^65.  The
-    incremental-dedup digests (``dedup_incremental`` and friends) keep
-    md5: there the hash IS the persisted frozen-corpus contract."""
+    grouping key for text equality), so it is the native
+    ``(xxhash64(text), length(text))`` pair instead of md5 — same groups
+    for equal texts, ~10x less hashing CPU on the full corpus scan.
+    Collision bound: texts of different lengths never share a key, and
+    two distinct texts of equal length share one with probability
+    2^-64, so the expected number of wrongly merged pairs is at most
+    sum_L n_L^2 / 2^65 over the n_L texts of each length L (<= n^2/2^65).
+    The incremental-dedup digests (``dedup_incremental`` and friends)
+    keep md5: there the hash IS the persisted frozen-corpus contract."""
     return (
-        corpus.select(F.col("doc_id"), F.xxhash64("text").alias("h"))
-        .groupBy("h")
+        corpus.select(
+            F.col("doc_id"),
+            F.xxhash64("text").alias("h"),
+            F.length("text").alias("n_chars"),
+        )
+        .groupBy("h", "n_chars")
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
         .select("keep_id", "n_copies")
     )

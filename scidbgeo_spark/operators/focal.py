@@ -11,6 +11,14 @@ chunk; a pandas kernel assembles the (h+2)x(w+2) padded array and runs the
 vectorized 3x3 shrinking-window mean.  Shuffle volume is ~ (1 + 4/chunk) x
 the raster, vs 9x for the naive COO 2-D self-join.
 
+Every per-cell focal operator runs through ONE path, :func:`_halo_run`:
+halo messages, the recipient-chunk ``applyInPandas``, padded-array
+assembly, then the operator's NumPy kernel ``kernel(key, vals, mask,
+interior)``.  An operator is its kernel, its output schema and any
+closing aggregate; kernels that emit cells build their rows with
+:func:`_cell_frame`.  Only the materialized-halo reference mode
+(:func:`focal_mean_sum36_overlap`) has no exchange and its own path.
+
 The headline aggregate ``sum(value_avg)`` is returned in the exact integer
 encoding sum36 = sum(box_sum * 36/box_count) (see kernels.focal_sum36), so
 the result is bitwise reproducible across partitionings and engines.
@@ -28,9 +36,7 @@ from scidbgeo_spark.kernels import focal_mean, focal_sum36, steepest_descent
 _OFFSETS = [(oy, ox) for oy in (-1, 0, 1) for ox in (-1, 0, 1)]
 
 
-def _message_expr(
-    oy: int, ox: int, nty: int, ntx: int, r: int = 1, extra: str = ""
-) -> str:
+def _message_expr(oy: int, ox: int, nty: int, ntx: int, r: int, extra: str) -> str:
     """SQL expression for the halo message a chunk sends to neighbor
     (tile_y+oy, tile_x+ox): the r-cell border strip of px adjacent to
     it (r = window radius; the 8-neighbor scheme needs every tile to be
@@ -75,7 +81,7 @@ def _check_radius(height: int, width: int, chunk: int, r: int) -> None:
 
 
 def _halo_messages(
-    tiles: DataFrame, height: int, width: int, chunk: int, r: int = 1, extra: str = ""
+    tiles: DataFrame, height: int, width: int, chunk: int, r: int, extra: str
 ) -> DataFrame:
     """One exchange of border strips; ``extra`` prepends key fields into
     every message struct (the 3-D path routes 'band' through it)."""
@@ -92,7 +98,7 @@ def _halo_messages(
     )
 
 
-def _assemble(pdf: pd.DataFrame, r: int = 1):
+def _assemble(pdf: pd.DataFrame, r: int):
     """Paste center + halo fragments into an r-padded array; returns
     (vals, mask, interior) for the kernel."""
     center = pdf[(pdf.sy == 0) & (pdf.sx == 0)].iloc[0]
@@ -109,18 +115,52 @@ def _assemble(pdf: pd.DataFrame, r: int = 1):
     return vals, mask, (slice(r, r + h), slice(r, r + w))
 
 
+def _halo_run(
+    tiles: DataFrame,
+    height: int,
+    width: int,
+    chunk: int,
+    r: int,
+    kernel,
+    schema: str,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """The focal path: one halo exchange, one pandas group per recipient
+    chunk, ``kernel(key, vals, mask, interior)`` on its r-padded array.
+    ``key`` is ``(*keys, tile_y, tile_x)``; ``keys`` ride the message
+    struct, so a 3-D raster's bands share the one exchange and never mix."""
+    extra = "".join(f"'{k}', {k}, " for k in keys)
+    msgs = _halo_messages(tiles, height, width, chunk, r, extra)
+
+    def _tile(key, pdf):
+        return kernel(key, *_assemble(pdf, r))
+
+    return msgs.groupBy(*keys, "rty", "rtx").applyInPandas(_tile, schema=schema)
+
+
+def _cell_frame(key, chunk: int, interior, keep=None, **cols) -> pd.DataFrame:
+    """Per-cell rows (y, x, **cols) of the tile ``key`` ends with, in
+    row-major order over ``interior``; ``keep`` (interior-shaped bool)
+    drops cells, and ``cols`` are then given for the kept cells only."""
+    iy, ix = interior
+    th, tw = iy.stop - iy.start, ix.stop - ix.start
+    y = np.repeat(np.arange(th, dtype=np.int64) + int(key[-2]) * chunk, tw)
+    x = np.tile(np.arange(tw, dtype=np.int64) + int(key[-1]) * chunk, th)
+    if keep is not None:
+        y, x = y[keep.ravel()], x[keep.ravel()]
+    return pd.DataFrame({"y": y, "x": x, **{k: np.ravel(v) for k, v in cols.items()}})
+
+
 def focal_mean_sum36(
     tiles: DataFrame, height: int, width: int, chunk: int
 ) -> DataFrame:
     """aggregate(window(A,1,1,1,1,avg(value)), sum(value_avg)) — exact
     integer encoding; divide by 36.0 for the float value."""
-    msgs = _halo_messages(tiles, height, width, chunk)
 
-    def _partial(key, pdf):
-        vals, mask, interior = _assemble(pdf)
+    def _partial(key, vals, mask, interior):
         return pd.DataFrame({"ps": [focal_sum36(vals, mask, interior)]})
 
-    partials = msgs.groupBy("rty", "rtx").applyInPandas(_partial, schema="ps long")
+    partials = _halo_run(tiles, height, width, chunk, 1, _partial, "ps long")
     return partials.agg(F.sum("ps").alias("focal_sum36"))
 
 
@@ -202,25 +242,13 @@ def focal_extrema_coo(
     separable sliding-extreme kernel instead of the cumsum."""
     from scidbgeo_spark.kernels import box_extrema
 
-    msgs = _halo_messages(tiles, height, width, chunk, radius)
-
-    def _tile(key, pdf):
-        vals, mask, interior = _assemble(pdf, radius)
+    def _tile(key, vals, mask, interior):
         mn, mx = box_extrema(vals, mask, interior, radius)
-        th, tw = mx.shape
-        y0 = int(key[0]) * chunk
-        x0 = int(key[1]) * chunk
-        return pd.DataFrame(
-            {
-                "y": np.repeat(np.arange(th, dtype=np.int64) + y0, tw),
-                "x": np.tile(np.arange(tw, dtype=np.int64) + x0, th),
-                "min_value": mn.ravel(),
-                "max_value": mx.ravel(),
-            }
-        )
+        return _cell_frame(key, chunk, interior, min_value=mn, max_value=mx)
 
-    return msgs.groupBy("rty", "rtx").applyInPandas(
-        _tile, schema="y long, x long, min_value long, max_value long"
+    return _halo_run(
+        tiles, height, width, chunk, radius, _tile,
+        "y long, x long, min_value long, max_value long",
     )
 
 
@@ -243,31 +271,19 @@ def focal_var_coo(
     """
     from scidbgeo_spark.kernels import box_sum_count
 
-    msgs = _halo_messages(tiles, height, width, chunk, radius)
-
-    def _tile(key, pdf):
-        vals, mask, interior = _assemble(pdf, radius)
+    def _tile(key, vals, mask, interior):
         s1, n = box_sum_count(vals, mask, radius)
         s2, _ = box_sum_count(vals * vals, mask, radius)
         s1, s2, n = s1[interior], s2[interior], n[interior]
         nvar = n * s2 - s1 * s1
-        th, tw = n.shape
-        y0 = int(key[0]) * chunk
-        x0 = int(key[1]) * chunk
-        return pd.DataFrame(
-            {
-                "y": np.repeat(np.arange(th, dtype=np.int64) + y0, tw),
-                "x": np.tile(np.arange(tw, dtype=np.int64) + x0, th),
-                "n_cells": n.ravel(),
-                "sum_v": s1.ravel(),
-                "nvar": nvar.ravel(),
-                "var_pop": (nvar / (n * n)).ravel(),
-            }
+        return _cell_frame(
+            key, chunk, interior,
+            n_cells=n, sum_v=s1, nvar=nvar, var_pop=nvar / (n * n),
         )
 
-    return msgs.groupBy("rty", "rtx").applyInPandas(
-        _tile,
-        schema="y long, x long, n_cells long, sum_v long, nvar long, var_pop double",
+    return _halo_run(
+        tiles, height, width, chunk, radius, _tile,
+        "y long, x long, n_cells long, sum_v long, nvar long, var_pop double",
     )
 
 
@@ -283,24 +299,12 @@ def focal_mode_coo(
     over cells."""
     from scidbgeo_spark.kernels import box_mode
 
-    msgs = _halo_messages(tiles, height, width, chunk)
-
-    def _tile(key, pdf):
-        vals, mask, interior = _assemble(pdf)
+    def _tile(key, vals, mask, interior):
         m = box_mode(vals, mask, interior)
-        th, tw = m.shape
-        y0 = int(key[0]) * chunk
-        x0 = int(key[1]) * chunk
-        return pd.DataFrame(
-            {
-                "y": np.repeat(np.arange(th, dtype=np.int64) + y0, tw),
-                "x": np.tile(np.arange(tw, dtype=np.int64) + x0, th),
-                "mode_value": m.ravel(),
-            }
-        )
+        return _cell_frame(key, chunk, interior, mode_value=m)
 
-    return msgs.groupBy("rty", "rtx").applyInPandas(
-        _tile, schema="y long, x long, mode_value long"
+    return _halo_run(
+        tiles, height, width, chunk, 1, _tile, "y long, x long, mode_value long"
     )
 
 
@@ -312,10 +316,7 @@ def focal_mean_tiles(
     window radius (the reference's AFL window op takes arbitrary bounds;
     the halo exchange sends r-cell strips, the kernel slides a
     (2r+1)^2 shrinking box)."""
-    msgs = _halo_messages(tiles, height, width, chunk, radius)
-
-    def _tile(key, pdf):
-        vals, mask, interior = _assemble(pdf, radius)
+    def _tile(key, vals, mask, interior):
         m = focal_mean(vals, mask, interior, radius)
         th, tw = m.shape
         return pd.DataFrame(
@@ -330,9 +331,9 @@ def focal_mean_tiles(
             }
         )
 
-    return msgs.groupBy("rty", "rtx").applyInPandas(
-        _tile,
-        schema="tile_y int, tile_x int, y0 long, x0 long, h int, w int, px array<double>",
+    return _halo_run(
+        tiles, height, width, chunk, radius, _tile,
+        "tile_y int, tile_x int, y0 long, x0 long, h int, w int, px array<double>",
     )
 
 
@@ -367,10 +368,8 @@ def terrain_coo(
     exchange (~(1 + 4/chunk) x the raster, never 9x), vectorized NumPy
     per tile, output stays distributed COO.
     """
-    msgs = _halo_messages(tiles, height, width, chunk)
-
-    def _tile(key, pdf):
-        vals, mask, (iy, ix) = _assemble(pdf)
+    def _tile(key, vals, mask, interior):
+        iy, ix = interior
         th = iy.stop - iy.start
         tw = ix.stop - ix.start
 
@@ -387,12 +386,6 @@ def terrain_coo(
             for dx in (-1, 0, 1):
                 valid &= mask[1 + dy : 1 + dy + th, 1 + dx : 1 + dx + tw]
         gx, gy = gx[valid], gy[valid]
-        yy = (np.repeat(np.arange(th, dtype=np.int64), tw) + int(key[0]) * chunk)[
-            valid.ravel()
-        ]
-        xx = (np.tile(np.arange(tw, dtype=np.int64), th) + int(key[1]) * chunk)[
-            valid.ravel()
-        ]
         ax, ay = np.abs(gx), np.abs(gy)
         d8 = np.select(
             [
@@ -419,22 +412,15 @@ def terrain_coo(
             )
             + 0.5
         )
-        return pd.DataFrame(
-            {
-                "y": yy,
-                "x": xx,
-                "gx": gx,
-                "gy": gy,
-                "slope": slope,
-                "d8": d8.astype(np.int32),
-                "hillshade": hs.astype(np.int32),
-            }
+        return _cell_frame(
+            key, chunk, interior, valid,
+            gx=gx, gy=gy, slope=slope,
+            d8=d8.astype(np.int32), hillshade=hs.astype(np.int32),
         )
 
-    return msgs.groupBy("rty", "rtx").applyInPandas(
-        _tile,
-        schema="y long, x long, gx long, gy long, slope double, "
-        "d8 int, hillshade int",
+    return _halo_run(
+        tiles, height, width, chunk, 1, _tile,
+        "y long, x long, gx long, gy long, slope double, d8 int, hillshade int",
     )
 
 
@@ -446,18 +432,14 @@ def focal_mean_time(
     ``window(A, 0,0, 1,1, 1,1, avg)`` — band radius 0), one query for
     all slices.
 
-    Scale shape: 'band' rides the halo-message KEY ('extra' field in
-    the message struct), so the ONE existing exchange covers every time
-    slice — slices can never mix (grouping is (band, tile)), the time
-    dimension adds zero extra shuffles, and a 1000-step series costs
-    the same shuffle count as one raster.  Kernel and assembly are the
-    verified 2-D ones, unchanged."""
-    m = _halo_messages(
-        tiles3, height, width, chunk, radius, extra="'band', band, "
-    )
+    Scale shape: 'band' rides the halo-message KEY (the runner's
+    ``keys``), so the ONE existing exchange covers every time slice —
+    slices can never mix (grouping is (band, tile)), the time dimension
+    adds zero extra shuffles, and a 1000-step series costs the same
+    shuffle count as one raster.  Kernel and assembly are the verified
+    2-D ones, unchanged."""
 
-    def _tile(key, pdf):
-        vals, mask, interior = _assemble(pdf, radius)
+    def _tile(key, vals, mask, interior):
         out = focal_mean(vals, mask, interior, radius)
         return pd.DataFrame(
             {
@@ -469,8 +451,9 @@ def focal_mean_time(
             }
         )
 
-    t = m.groupBy("band", "rty", "rtx").applyInPandas(
-        _tile, schema="band int, y0 long, x0 long, w int, px array<double>"
+    t = _halo_run(
+        tiles3, height, width, chunk, radius, _tile,
+        "band int, y0 long, x0 long, w int, px array<double>", keys=("band",),
     )
     e = t.select("band", "y0", "x0", "w", F.posexplode("px").alias("pos", "value_avg"))
     return e.select(
@@ -504,34 +487,17 @@ def flow_edges_coo(
     One JVM-side halo exchange (the same ~(1 + 4/chunk) border-strip
     shuffle every focal op here uses), then a vectorized NumPy argmin
     per tile; output is edge rows, never a dense matrix."""
-    msgs = _halo_messages(tiles, height, width, chunk)
-
-    def _tile(key, pdf):
-        vals, mask, (iy, ix) = _assemble(pdf)
-        th = iy.stop - iy.start
-        tw = ix.stop - ix.start
+    def _tile(key, vals, mask, interior):
         # scan order (dy, dx) == target (ty, tx) order, and the strict <
         # keeps the FIRST minimum — exactly ORDER BY value, ty, tx.
         sel, bdy, bdx = steepest_descent(vals, mask)
-        yy = (
-            np.repeat(np.arange(th, dtype=np.int64), tw).reshape(th, tw)
-            + int(key[0]) * chunk
-        )
-        xx = (
-            np.tile(np.arange(tw, dtype=np.int64), th).reshape(th, tw)
-            + int(key[1]) * chunk
-        )
+        c = _cell_frame(key, chunk, interior, sel)
         return pd.DataFrame(
-            {
-                "uy": yy[sel],
-                "ux": xx[sel],
-                "ty": (yy + bdy)[sel],
-                "tx": (xx + bdx)[sel],
-            }
+            {"uy": c.y, "ux": c.x, "ty": c.y + bdy[sel], "tx": c.x + bdx[sel]}
         )
 
-    return msgs.groupBy("rty", "rtx").applyInPandas(
-        _tile, schema="uy long, ux long, ty long, tx long"
+    return _halo_run(
+        tiles, height, width, chunk, 1, _tile, "uy long, ux long, ty long, tx long"
     )
 
 
@@ -625,10 +591,8 @@ def join_counts_coo(
     the same border strips every focal op ships), a vectorized NumPy
     pair count per tile, and a single-row global sum — no self-join of
     the raster at any scale."""
-    msgs = _halo_messages(tiles, height, width, chunk)
-
-    def _tile(key, pdf):
-        vals, mask, (iy, ix) = _assemble(pdf)
+    def _tile(key, vals, mask, interior):
+        iy, ix = interior
         th = iy.stop - iy.start
         tw = ix.stop - ix.start
         b = (vals >= threshold).astype(np.int64)
@@ -647,9 +611,7 @@ def join_counts_coo(
             {"bb": [out[0]], "bw": [out[1]], "ww": [out[2]]}
         )
 
-    parts = msgs.groupBy("rty", "rtx").applyInPandas(
-        _tile, schema="bb long, bw long, ww long"
-    )
+    parts = _halo_run(tiles, height, width, chunk, 1, _tile, "bb long, bw long, ww long")
     return parts.agg(
         F.sum("bb").alias("n_bb"),
         F.sum("bw").alias("n_bw"),
@@ -783,10 +745,8 @@ def edge_density_coo(
     per-tile vectorized pair encoding + bincount, then a
     map-side-combinable (cls_a, cls_b) sum whose key space is
     |classes|^2, constant in the raster."""
-    msgs = _halo_messages(tiles, height, width, chunk)
-
-    def _tile(key, pdf):
-        vals, mask, (iy, ix) = _assemble(pdf)
+    def _tile(key, vals, mask, interior):
+        iy, ix = interior
         th = iy.stop - iy.start
         tw = ix.stop - ix.start
         cls = vals // class_div
@@ -812,8 +772,8 @@ def edge_density_coo(
             }
         )
 
-    parts = msgs.groupBy("rty", "rtx").applyInPandas(
-        _tile, schema="cls_a long, cls_b long, n long"
+    parts = _halo_run(
+        tiles, height, width, chunk, 1, _tile, "cls_a long, cls_b long, n long"
     )
     return parts.groupBy("cls_a", "cls_b").agg(F.sum("n").alias("n_edges"))
 

@@ -362,6 +362,38 @@ def knn_classify(
     )
 
 
+def _cell_counts(points: DataFrame, cell: float, name: str) -> DataFrame:
+    """(cy, cx, <name>): the point count of every occupied
+    ``cell``-degree grid cell — one map-side-combinable aggregate, at
+    most (180 / cell) x (360 / cell) rows whatever the corpus size."""
+    return (
+        points.select(
+            F.floor((F.col("lat") + 90.0) / cell).cast("long").alias("cy"),
+            F.floor((F.col("lon") + 180.0) / cell).cast("long").alias("cx"),
+        )
+        .groupBy("cy", "cx")
+        .agg(F.count("*").alias(name))
+    )
+
+
+def _queen_scatter(
+    cells: DataFrame, payload: str, name: str, with_self: bool = False
+) -> DataFrame:
+    """(cy2, cx2, <name>): every (cy, cx) row sends the SQL expression
+    ``payload`` to its 8 queen neighbours, and to itself when
+    ``with_self`` — a constant x8 (x9) explode of a cell table, so a
+    neighbour statistic is one aggregate or equi-join on (cy2, cx2),
+    never a self-join on ranges.  Targets off the grid are not dropped:
+    they match no occupied cell."""
+    msgs = ", ".join(
+        f"named_struct('cy2', cy + {dy}, 'cx2', cx + {dx}, '{name}', {payload})"
+        for dy in (-1, 0, 1)
+        for dx in (-1, 0, 1)
+        if with_self or (dy, dx) != (0, 0)
+    )
+    return cells.select(F.explode(F.expr(f"array({msgs})")).alias("m")).select("m.*")
+
+
 def point_density(points: DataFrame) -> DataFrame:
     """Smoothed point-density surface (heatmap) on the 1-degree grid:
     per-cell point counts convolved with the 3x3 binomial kernel
@@ -377,14 +409,7 @@ def point_density(points: DataFrame) -> DataFrame:
     second cell-keyed agg.  Shuffle volume ~ points-agg + 9 x n_cells;
     there is no point-level self-join at any scale.  Output cells are
     those receiving any kernel mass (sparse world stays sparse)."""
-    cells = (
-        points.select(
-            F.floor(F.col("lat") + 90.0).cast("long").alias("cy"),
-            F.floor(F.col("lon") + 180.0).cast("long").alias("cx"),
-        )
-        .groupBy("cy", "cx")
-        .agg(F.count("*").alias("n"))
-    )
+    cells = _cell_counts(points, 1.0, "n")
     msgs = ", ".join(
         f"named_struct('cy2', cy + {dy}, 'cx2', cx + {dx}, "
         f"'wn', n * {(2 - abs(dy)) * (2 - abs(dx))})"
@@ -426,14 +451,7 @@ def moran_i(points: DataFrame, cell: float = 10.0) -> DataFrame:
     self-join of the cell table via a constant x8 scatter — shuffle
     volume ~ the points agg; nothing point-level ever joins."""
     dec = "decimal(38,0)"
-    cells = (
-        points.select(
-            F.floor((F.col("lat") + 90.0) / cell).cast("long").alias("cy"),
-            F.floor((F.col("lon") + 180.0) / cell).cast("long").alias("cx"),
-        )
-        .groupBy("cy", "cx")
-        .agg(F.count("*").alias("x"))
-    )
+    cells = _cell_counts(points, cell, "x")
     st = cells.agg(F.count("*").alias("n"), F.sum("x").alias("s"))
     z = (
         cells.crossJoin(F.broadcast(st))
@@ -445,16 +463,7 @@ def moran_i(points: DataFrame, cell: float = 10.0) -> DataFrame:
         )
         .cache()
     )
-    msgs = ", ".join(
-        f"named_struct('cy2', cy + {dy}, 'cx2', cx + {dx}, 'za', z)"
-        for dy in (-1, 0, 1)
-        for dx in (-1, 0, 1)
-        if (dy, dx) != (0, 0)
-    )
-    scattered = z.select(F.explode(F.expr(f"array({msgs})")).alias("m")).select(
-        "m.*"
-    )
-    prs = scattered.join(
+    prs = _queen_scatter(z, "z", "za").join(
         F.broadcast(z.select(F.col("cy").alias("cy2"), F.col("cx").alias("cx2"), F.col("z").alias("zb"))),
         ["cy2", "cx2"],
     ).agg(
@@ -492,29 +501,15 @@ def local_moran(points: DataFrame, cell: float = 10.0) -> DataFrame:
     to moran_i (one points agg, then a broadcast x8 scatter of the
     <= 64,800-row cell table)."""
     dec = "decimal(38,0)"
-    cells = (
-        points.select(
-            F.floor((F.col("lat") + 90.0) / cell).cast("long").alias("cy"),
-            F.floor((F.col("lon") + 180.0) / cell).cast("long").alias("cx"),
-        )
-        .groupBy("cy", "cx")
-        .agg(F.count("*").alias("x"))
-    )
+    cells = _cell_counts(points, cell, "x")
     st = cells.agg(F.count("*").alias("n"), F.sum("x").alias("s"))
     z = cells.crossJoin(F.broadcast(st)).select(
         "cy",
         "cx",
         (F.col("x").cast(dec) * F.col("n") - F.col("s")).alias("nz"),
     )
-    msgs = ", ".join(
-        f"named_struct('cy2', cy + {dy}, 'cx2', cx + {dx}, 'nzn', nz)"
-        for dy in (-1, 0, 1)
-        for dx in (-1, 0, 1)
-        if (dy, dx) != (0, 0)
-    )
     lag = (
-        z.select(F.explode(F.expr(f"array({msgs})")).alias("m"))
-        .select("m.*")
+        _queen_scatter(z, "nz", "nzn")
         .groupBy(F.col("cy2").alias("cy"), F.col("cx2").alias("cx"))
         .agg(F.sum("nzn").alias("lag_nz"), F.count("*").alias("n_nbrs"))
     )
@@ -552,27 +547,14 @@ def gi_star(points: DataFrame, cell: float = 10.0) -> DataFrame:
     forever), a constant x9 scatter of that cell table, broadcast
     joins only."""
     dec = "decimal(38,0)"
-    cells = (
-        points.select(
-            F.floor((F.col("lat") + 90.0) / cell).cast("long").alias("cy"),
-            F.floor((F.col("lon") + 180.0) / cell).cast("long").alias("cx"),
-        )
-        .groupBy("cy", "cx")
-        .agg(F.count("*").alias("x"))
-    )
+    cells = _cell_counts(points, cell, "x")
     st = cells.agg(
         F.count("*").alias("n"),
         F.sum("x").alias("s"),
         F.sum((F.col("x").cast(dec) * F.col("x"))).alias("s2"),
     )
-    msgs = ", ".join(
-        f"named_struct('cy2', cy + {dy}, 'cx2', cx + {dx}, 'xn', x)"
-        for dy in (-1, 0, 1)
-        for dx in (-1, 0, 1)
-    )
     nbr = (
-        cells.select(F.explode(F.expr(f"array({msgs})")).alias("m"))
-        .select("m.*")
+        _queen_scatter(cells, "x", "xn", with_self=True)
         .groupBy(F.col("cy2").alias("cy"), F.col("cx2").alias("cx"))
         .agg(F.sum("xn").alias("sum_nbr"), F.count("*").alias("w"))
     )
@@ -731,28 +713,14 @@ def grid_dbscan(
     regions/knn certification-loop shape).  Exact integers; label = min
     reachable cell id, pinned by the oracle's recursive reachability."""
     nx = int(round(360.0 / cell))
-    cells = (
-        points.select(
-            F.floor((F.col("lat") + 90.0) / cell).cast("long").alias("cy"),
-            F.floor((F.col("lon") + 180.0) / cell).cast("long").alias("cx"),
-        )
-        .groupBy("cy", "cx")
-        .agg(F.count("*").alias("npts"))
-    )
+    cells = _cell_counts(points, cell, "npts")
     core = cells.filter(F.col("npts") >= minpts).select(
         "cy", "cx", (F.col("cy") * nx + F.col("cx")).alias("lbl")
-    )
-    msgs = ", ".join(
-        f"named_struct('cy2', cy + {dy}, 'cx2', cx + {dx}, 'l', lbl)"
-        for dy in (-1, 0, 1)
-        for dx in (-1, 0, 1)
-        if (dy, dx) != (0, 0)
     )
     cur = core.localCheckpoint()
     for _ in range(max_rounds):
         nbr = (
-            cur.select(F.explode(F.expr(f"array({msgs})")).alias("m"))
-            .select("m.*")
+            _queen_scatter(cur, "lbl", "l")
             .groupBy(F.col("cy2").alias("cy"), F.col("cx2").alias("cx"))
             .agg(F.min("l").alias("nb_min"))
         )
@@ -775,15 +743,8 @@ def grid_dbscan(
         raise RuntimeError(f"label propagation did not converge in {max_rounds}")
     lbl = cur.select("cy", "cx", F.col("lbl").alias("core_cluster"))
     # border attachment: min cluster among queen-adjacent core cells
-    bmsgs = ", ".join(
-        f"named_struct('cy2', cy + {dy}, 'cx2', cx + {dx}, 'l', core_cluster)"
-        for dy in (-1, 0, 1)
-        for dx in (-1, 0, 1)
-        if (dy, dx) != (0, 0)
-    )
     badj = (
-        lbl.select(F.explode(F.expr(f"array({bmsgs})")).alias("m"))
-        .select("m.*")
+        _queen_scatter(lbl, "core_cluster", "l")
         .groupBy(F.col("cy2").alias("cy"), F.col("cx2").alias("cx"))
         .agg(F.min("l").alias("border_cluster"))
     )
@@ -918,24 +879,8 @@ def geary_c(points: DataFrame, cell: float = 10.0) -> DataFrame:
     self-join of the CELL table, three one-row aggregates riding the
     plan; nothing point-level ever joins."""
     dec = "decimal(38,0)"
-    cells = (
-        points.select(
-            F.floor((F.col("lat") + 90.0) / cell).cast("long").alias("cy"),
-            F.floor((F.col("lon") + 180.0) / cell).cast("long").alias("cx"),
-        )
-        .groupBy("cy", "cx")
-        .agg(F.count("*").alias("x"))
-    )
-    msgs = ", ".join(
-        f"named_struct('cy2', cy + {dy}, 'cx2', cx + {dx}, 'xa', x)"
-        for dy in (-1, 0, 1)
-        for dx in (-1, 0, 1)
-        if (dy, dx) != (0, 0)
-    )
-    scattered = cells.select(F.explode(F.expr(f"array({msgs})")).alias("m")).select(
-        "m.*"
-    )
-    prs = scattered.join(
+    cells = _cell_counts(points, cell, "x")
+    prs = _queen_scatter(cells, "x", "xa").join(
         F.broadcast(
             cells.select(
                 F.col("cy").alias("cy2"), F.col("cx").alias("cx2"), F.col("x").alias("xb")

@@ -389,22 +389,30 @@ def pip_join_df(
             out[ii] = points_in_ring(lo[ii], la[ii], ring)
         return pd.Series(out)
 
-    pts = points.withColumn("ccell", cell_col(res=CAND_RES, nx=CAND_NX))
     rings = poly_df.select("zone_id", "xs", "ys")
+    return _candidates(points, poly_df, rings, mode).filter(
+        _refine_arrays("lon", "lat", "zone_id", "xs", "ys")
+    ).select(points["*"], F.col("zone_id").cast("long").alias("zone_id"))
+
+
+def _candidates(
+    points: DataFrame, poly_df: DataFrame, rings: DataFrame, mode: str
+) -> DataFrame:
+    """Candidate (point, zone) rows of the DataFrame-layer PIP join: the
+    points' candidate cell joins the bare covering-cell table, then the
+    zone-keyed ``rings`` frame attaches — both joins broadcast or both
+    shuffled, per ``mode``."""
+    pts = points.withColumn("ccell", cell_col(res=CAND_RES, nx=CAND_NX))
     if mode == "broadcast":
         hits = pts.join(F.broadcast(_covering_cand(poly_df)), "ccell")
-        candidates = hits.join(F.broadcast(rings), "zone_id")
-    elif mode == "shuffle":
+        return hits.join(F.broadcast(rings), "zone_id")
+    if mode == "shuffle":
         # explicit: a layer too big to replicate must not be broadcast
         # even if Catalyst's size estimate would allow it
         cand = _covering_cand(poly_df).hint("shuffle_hash")
         hits = pts.join(cand, "ccell")
-        candidates = hits.join(rings.hint("shuffle_hash"), "zone_id")
-    else:
-        raise ValueError(f"unknown pip mode {mode!r}")
-    return candidates.filter(
-        _refine_arrays("lon", "lat", "zone_id", "xs", "ys")
-    ).select(points["*"], F.col("zone_id").cast("long").alias("zone_id"))
+        return hits.join(rings.hint("shuffle_hash"), "zone_id")
+    raise ValueError(f"unknown pip mode {mode!r}")
 
 
 def _pip_join_rings(points: DataFrame, poly_df: DataFrame, mode: str) -> DataFrame:
@@ -448,17 +456,7 @@ def _pip_join_rings(points: DataFrame, poly_df: DataFrame, mode: str) -> DataFra
             out[ii] = acc
         return pd.Series(out)
 
-    pts = points.withColumn("ccell", cell_col(res=CAND_RES, nx=CAND_NX))
-    if mode == "broadcast":
-        hits = pts.join(F.broadcast(_covering_cand(poly_df)), "ccell")
-        candidates = hits.join(F.broadcast(rings), "zone_id")
-    elif mode == "shuffle":
-        cand = _covering_cand(poly_df).hint("shuffle_hash")
-        hits = pts.join(cand, "ccell")
-        candidates = hits.join(rings.hint("shuffle_hash"), "zone_id")
-    else:
-        raise ValueError(f"unknown pip mode {mode!r}")
-    return candidates.filter(
+    return _candidates(points, poly_df, rings, mode).filter(
         _refine_rings("lon", "lat", "zone_id", "rings_xs", "rings_ys")
     ).select(points["*"], F.col("zone_id").cast("long").alias("zone_id"))
 

@@ -83,8 +83,8 @@ def rect_zone(
     x: Column | str = "x",
 ) -> Column:
     """Zone id (BIGINT) of cell (y, x) in the FULL-GRID rectangle layer
-    ``fixtures.rect_grid_polygons`` / ``PolyPack.rect_grid`` — the
-    engine's one copy of the rect-grid rule.
+    ``fixtures.rect_grid_polygons`` — the engine's one copy of the
+    rect-grid rule.
 
     Pixel centers sit at half-integers and rect edges at integers, so
     ``points_in_ring``'s half-open [a,b)×[c,d) inclusion reduces exactly
@@ -123,11 +123,13 @@ def rasterize_rect_grid(
     over every cell of each tile, in one higher-order ``transform`` (no
     Python rasterize stage).
 
-    No query takes this path — rect-grid zonal queries put
-    :func:`rect_zone` on their COO rows instead.  It is kept for the
-    kernel-parity test (bit-identical to
-    ``rasterize_polygons(rect_grid_polygons(h, w))``) and for
-    perfbench's traced ``zonal.rasterize_rect_s`` span."""
+    Bit-identical to ``rasterize_polygons(rect_grid_polygons(h, w))``
+    (pinned by the kernel-parity test).  No registered query takes this
+    path — rect-grid zonal queries put :func:`rect_zone` on their COO
+    rows instead; the callers that want zone TILES are the phase-timed
+    ``cli.run_zonal``, the ``rasterize`` stage of
+    ``plans.lineage``'s checkpointed pipeline, ``tools/scale_smoke.py``
+    and perfbench's traced ``zonal.rasterize_rect_s`` span."""
     grid = tiling.tile_grid(spark, height, width, chunk)
     cells = F.sequence(F.lit(0), F.col("h") * F.col("w") - 1)
 
@@ -405,7 +407,10 @@ def zonal_ivm_apply(
         .groupBy("id")
         .agg(F.sum("dv").alias("dsum"))
     )
-    merged = base_agg.join(dsum, "id", "left")
+    # dsum has one row per zone; without the hint the planner, lacking
+    # column statistics, reads the zone-COO join as GiB-sized and plans
+    # a sort-merge join that only adaptive execution undoes at run time
+    merged = base_agg.join(F.broadcast(dsum), "id", "left")
     s = F.col("sum_value") + F.coalesce(F.col("dsum"), F.lit(0))
     return merged.select(
         F.col("id").cast("long").alias("id"),

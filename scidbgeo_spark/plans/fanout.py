@@ -67,7 +67,12 @@ def fan_out(df: DataFrame, *key_cols: str, min_bytes: int = 0) -> DataFrame:
     repartition's own exchange costs more than it saves (measured at
     sf0.1: pip_grid +0.3 s with an unconditional fan-out).  CPU-dense
     operators (gram/shingle hashing, cosine sweeps) pass
-    ``min_bytes=0`` — they win even on sub-MB inputs."""
+    ``min_bytes=0`` — they win even on sub-MB inputs.
+
+    The decision reads ``df.inputFiles()``, so a source that is not a
+    file scan is NEVER repartitioned — ``spark.range``, an in-memory
+    relation, even a single-partition ``createDataFrame`` is returned as
+    is, however few partitions it has."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     files = df.inputFiles()

@@ -139,8 +139,8 @@ def zonal_pipeline(
     zones = pipe.stage(
         "rasterize",
         fp,
-        lambda: zonal.rasterize_polygons(
-            spark, fixtures.rect_grid_polygons(h, w), h, w, chunk
+        lambda: zonal.rasterize_rect_grid(
+            spark, h, w, chunk, fixtures.ZONE_H, fixtures.ZONE_W
         ),
     )
     stats = pipe.stage(

@@ -399,15 +399,14 @@ def test_zonal_variance_int32_extreme_no_overflow(spark):
     """Four int32-extreme pixels push the sum of squares past 2^63: a
     BIGINT accumulator silently wraps (r3 advice); the DECIMAL(38,0)
     path must return the true variance."""
-    from scidbgeo_spark.kernels import PolyPack
-
     big = 2**31 - 1
     coo = spark.createDataFrame(
         [(0, 0, big), (0, 1, big), (1, 0, -big), (1, 1, big)],
         "y long, x long, value long",
     )
     tiles = tiling.pack_tiles(coo, 2, 2, 2)
-    zt = zonal.rasterize_polygons(spark, PolyPack.rect_grid(2, 2, 2, 2), 2, 2, 2)
+    ring = np.array([(0.0, 0.0), (2.0, 0.0), (2.0, 2.0), (0.0, 2.0)])
+    zt = zonal.rasterize_polygons(spark, [(0, ring)], 2, 2, 2)
     row = zonal.zonal_variance(zonal.zone_cells(tiles, zt)).collect()[0]
     assert row.count_value == 4
     # s = 2*big, ss = 4*big^2 (~1.8e19 > int64 max), var = 12*big^2/16
@@ -1293,21 +1292,26 @@ def test_integral_image_vs_numpy(spark, coo, dense):
 def test_zonal_ivm_apply_equals_recompute(spark, sf_smoke):
     """The IVM contract: applying an additive delta to the materialized
     base aggregate == full recompute over the updated raster; the merge
-    plan never rescans the base raster (single base scan)."""
+    plan never rescans the base raster (single base scan).  The zone
+    layer is the registered query's: a ``spark.range`` zone COO, whose
+    join the planner cannot size, so the initial plan broadcasts the
+    zone-count-sized delta sums only because the operator says so."""
+    import __spark_entry__ as e
+
     coo = model.raster_coo(spark, sf_smoke)
     h, w = model.raster_dims(spark, sf_smoke)
-    zt = zonal.rasterize_polygons(
-        spark, fixtures.rect_grid_polygons(h, w), h, w, CHUNK
-    )
-    zones_coo = tiling.tiles_to_coo(zt.withColumnRenamed("zid", "px"), "id")
+    zones_coo = e._rect_zones_coo(spark, h, w)
     base = zonal.zonal_sums(coo, zones_coo)
     eid = F.col("y") * w + F.col("x")
     delta = coo.filter(eid % 7 == 0).select(
         "y", "x", ((eid * 31) % 11).alias("dv")
     )
+    applied = zonal.zonal_ivm_apply(base, delta, zones_coo)
+    initial = applied._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in initial and "SortMergeJoin" not in initial
     got = {
         r.id: (r.sum_value, r.count_value, r.avg_value)
-        for r in zonal.zonal_ivm_apply(base, delta, zones_coo).collect()
+        for r in applied.collect()
     }
     updated = (
         coo.alias("c")

@@ -30,7 +30,6 @@ from scidbgeo_spark.session import get_spark  # noqa: E402
 
 def zonal_smoke(spark, h: int = 16384, chunk: int = 512, span: int = 20) -> dict:
     from scidbgeo_spark import tiling
-    from scidbgeo_spark.kernels import PolyPack
     from scidbgeo_spark.model import VALUE_MOD, VALUE_MULT
     from scidbgeo_spark.operators import zonal
 
@@ -42,8 +41,7 @@ def zonal_smoke(spark, h: int = 16384, chunk: int = 512, span: int = 20) -> dict
         ((F.col("id") * VALUE_MULT) % VALUE_MOD).alias("value"),
     )
     tiles = tiling.pack_tiles(coo, chunk, h, w)
-    pack = PolyPack.rect_grid(h, w, span, span)
-    zt = zonal.rasterize_polygons(spark, pack, h, w, chunk)
+    zt = zonal.rasterize_rect_grid(spark, h, w, chunk, span, span)
     rows = zonal.zonal_stats_tiles(tiles, zt).collect()
     wall = time.time() - t0
     total = sum(r.count_value for r in rows)
@@ -248,7 +246,6 @@ def temporal_smoke(spark, bands: int = 8, h: int = 2048, chunk: int = 256) -> di
     checks: the (zone, band) counts partition every cell; slice-vs-self
     change is all-zero."""
     from scidbgeo_spark import tiling
-    from scidbgeo_spark.kernels import PolyPack
     from scidbgeo_spark.model import VALUE_MOD, VALUE_MULT
     from scidbgeo_spark.operators import zonal
 
@@ -261,8 +258,7 @@ def temporal_smoke(spark, bands: int = 8, h: int = 2048, chunk: int = 256) -> di
         ((F.col("id") * VALUE_MULT) % VALUE_MOD).alias("value"),
     )
     tiles3 = tiling.pack_tiles_3d(coo3, chunk, h, w)
-    pack = PolyPack.rect_grid(h, w, 64, 64)
-    zt = zonal.rasterize_polygons(spark, pack, h, w, chunk)
+    zt = zonal.rasterize_rect_grid(spark, h, w, chunk, 64, 64)
     rows = zonal.zonal_stats_time(zonal.zone_cells(tiles3, zt)).collect()
     total = sum(r.count_value for r in rows)
     n_bands_seen = len({r.band for r in rows})
