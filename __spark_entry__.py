@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 import zipfile
 from collections.abc import Callable
 
@@ -50,7 +51,7 @@ def _ensure_pyfiles(spark: SparkSession) -> None:
         return
     # always rebuild: a recycled pid (or an edited package) must never
     # ship a stale zip to the workers
-    zpath = os.path.join("/tmp", f"scidbgeo_spark_pyfiles_{os.getpid()}.zip")
+    zpath = os.path.join(tempfile.gettempdir(), f"scidbgeo_spark_pyfiles_{os.getpid()}.zip")
     pkg = os.path.join(_REPO, "scidbgeo_spark")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg):
@@ -72,7 +73,7 @@ def _fixture_dir(kind: str, sf_dir: str, fresh: bool = False) -> str:
     import shutil
 
     h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = f"/tmp/scidbgeo_fixture_{kind}_{h}"
+    d = os.path.join(tempfile.gettempdir(), f"scidbgeo_fixture_{kind}_{h}")
     if fresh:
         shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)

@@ -1,8 +1,8 @@
 """Headline benchmark.
 
 Runs the 12 headline queries once each at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS] after an untimed warm-up, and prints
-ONE JSON line:
+sf0.1) on local[$SPARK_GRAFT_CPUS] (default: one task slot per CPU) after
+an untimed warm-up, and prints ONE JSON line:
 
   {"metric": "tiles_pages_per_sec", "value": N, "unit": "sec",
    "queries": {...per-query seconds...}, "sf": ..., "host": {},
@@ -30,9 +30,9 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from scidbgeo_spark.model import CHUNK
+from scidbgeo_spark.session import DEFAULT_CPUS as CPUS
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 HEADLINE = [
     "zonal_stats_rect",

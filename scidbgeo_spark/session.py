@@ -2,20 +2,147 @@
 
 Local mode is the sandbox stand-in for a multi-executor cluster; all
 configs below are the ones that transfer (AQE, Arrow, shuffle sizing).
+
+Class archive.  Most of a driver JVM's start-up is loading Spark, Scala
+and Hadoop classes from ``$SPARK_HOME/jars``.  A driver JVM that
+``get_spark`` launches keeps them in a dynamic AppCDS archive (JDK 13+)
+and maps it into the next one:
+
+- The archive is ``scidbgeo_cds_<key>.jsa`` under
+  ``tempfile.gettempdir()`` (``TMPDIR``), about 100 MB.  The key hashes
+  the real path of ``JAVA_HOME`` and the name, size and mtime of every
+  jar, so another JDK or Spark install gets its own archive.
+- When the archive exists, the JVM maps it (``-XX:SharedArchiveFile``);
+  on 4 CPUs a session then starts in about half the time.  A JVM that
+  cannot map it (another JDK, other jars or flags, a damaged file)
+  starts without it, and without the JDK's default archive, under the
+  default ``-Xshare:auto``.
+- When it does not exist, the JVM records the classes it loads
+  (``-XX:ArchiveClassesAtExit``) and writes them when it exits.  On 4
+  CPUs that first session takes 8-15 s more to exit, and its JVM holds
+  30-60 MB more resident memory.  It writes a file of its own,
+  ``<archive>.<id>.part``, which becomes the archive by ``os.replace``
+  only once the JVM has exited with code 0, so an archive is never
+  rewritten under a JVM that maps it.  That happens in ``stop_spark``, in the next ``get_spark`` of
+  the process, or at interpreter exit; concurrent first sessions each
+  write their own part, and the last to be published wins.
+- The JDK will not archive with a non-empty directory on the class path,
+  and Spark's launcher puts the conf dir first on it.  So the archive is
+  used only when the conf dir (``SPARK_CONF_DIR``, else
+  ``$SPARK_HOME/conf``) holds nothing but ``*.template`` files, which a
+  launch does not read; ``SPARK_CONF_DIR`` is then pointed at an empty
+  directory next to the archive.  When the conf dir holds any other
+  file, or ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR`` or
+  ``SPARK_DIST_CLASSPATH`` adds to the class path, the JVM launches with
+  no archive.
+
+To see that a session mapped the archive, add
+``-Xlog:class+load=info:file=<log>`` to ``--driver-java-options``: Spark's
+classes then read ``source: shared objects file (top)``.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shlex
+import shutil
+import subprocess
+import tempfile
+import uuid
+from typing import NamedTuple
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+# launcher environment that puts more entries on the driver's class path
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+# -Xlog:cds=off leaves the [cds,dynamic] warnings on: the gateway JVM
+# shares this process's stdout
+_QUIET = "-Xlog:cds*=off"
+# (JVM, part, archive) of each dumping driver JVM not yet published: the
+# JVMs belong to the process, as SparkContext's gateway does
+_dumps: list[tuple[subprocess.Popen, str, str]] = []
+
+
+class _Archive(NamedTuple):
+    """The class archive of a driver JVM about to launch."""
+
+    java_options: str
+    path: str
+    part: str | None  # where the JVM dumps; None when it maps ``path``
 
 
 def _driver_memory(phys_bytes: int) -> str:
     """40% of ``phys_bytes`` of RAM in whole GiB, between 1g and 48g."""
     return f"{min(48, max(1, phys_bytes * 2 // 5 // 2**30))}g"
+
+
+def _class_archive() -> _Archive | None:
+    """The class archive for a driver JVM launched now, or None when it
+    launches without one; points ``SPARK_CONF_DIR`` at the engine's empty
+    conf dir when the archive is used (see the module docstring)."""
+    home = _find_spark_home()
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(home, "conf")
+    if any(os.environ.get(v) for v in _CLASSPATH_ENV) or (
+        os.path.isdir(conf) and not all(n.endswith(".template") for n in os.listdir(conf))
+    ):
+        return None
+    own = os.path.join(tempfile.gettempdir(), "scidbgeo_spark_conf")
+    os.makedirs(own, exist_ok=True)
+    os.environ["SPARK_CONF_DIR"] = own
+    java = os.environ.get("JAVA_HOME") or shutil.which("java") or ""
+    key = hashlib.sha1(os.path.realpath(java).encode())
+    for jar in sorted(os.scandir(os.path.join(home, "jars")), key=lambda e: e.name):
+        st = jar.stat()
+        key.update(f"\0{jar.name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    path = os.path.join(tempfile.gettempdir(), f"scidbgeo_cds_{key.hexdigest()[:16]}.jsa")
+    if os.path.exists(path):
+        return _Archive(f"{shlex.quote('-XX:SharedArchiveFile=' + path)} {_QUIET}", path, None)
+    part = f"{path}.{uuid.uuid4().hex}.part"
+    return _Archive(f"{shlex.quote('-XX:ArchiveClassesAtExit=' + part)} {_QUIET}", path, part)
+
+
+def _publish() -> None:
+    """Publish the archive of every dumping JVM that has exited: rename its
+    part once it exited with code 0, else delete the part."""
+    for dump in [d for d in _dumps if d[0].poll() is not None]:
+        _dumps.remove(dump)
+        proc, part, path = dump
+        if proc.returncode == 0 and os.path.exists(part):
+            os.replace(part, path)
+        elif os.path.exists(part):
+            os.remove(part)
+
+
+@atexit.register
+def _publish_at_exit() -> None:
+    """End a dumping JVM before this process does, so its archive is
+    published rather than left as a part by an orphaned JVM."""
+    for proc, _part, _path in _dumps:
+        proc.stdin.close()
+        proc.wait(timeout=300)
+    _publish()
+
+
+def stop_spark(spark: SparkSession) -> None:
+    """Stop ``spark`` and its driver JVM, and wait for the JVM to exit; the
+    next ``get_spark`` launches a new one.  A first session's JVM writes
+    the class archive as it exits (8-15 s), and this publishes it."""
+    spark.stop()
+    gw = SparkContext._gateway
+    if gw is not None:
+        gw.shutdown()
+        SparkContext._gateway = None
+        SparkContext._jvm = None
+        if gw.proc is not None:  # None when spark-submit launched the JVM
+            gw.proc.stdin.close()
+            gw.proc.wait(timeout=300)
+    _publish()
 
 
 def get_spark(
@@ -33,6 +160,11 @@ def get_spark(
     - Arrow on: every pandas-UDF kernel moves data in columnar batches.
     - shuffle partitions ~ cores for local mode (not the 200 default).
     - driver memory: ``SPARK_DRIVER_MEM``, else 40% of the host's RAM.
+    - cores: ``SPARK_GRAFT_CPUS``, else the CPUs this process may run on.
+    - a driver JVM it launches maps the class archive, or writes it when
+      there is none yet (module docstring); the options go in
+      ``spark.driver.defaultJavaOptions``, so ``--driver-java-options``
+      still apply.
     """
     cores = cores or DEFAULT_CPUS
     shuffle = shuffle_partitions or max(cores, 8)
@@ -52,6 +184,15 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    _publish()
+    # a new driver JVM launches unless one is up, or spark-submit runs us
+    archive = None
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        archive = _class_archive()
+    if archive:
+        builder = builder.config("spark.driver.defaultJavaOptions", archive.java_options)
     spark = builder.getOrCreate()
+    if archive and archive.part:
+        _dumps.append((SparkContext._gateway.proc, archive.part, archive.path))
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -1,12 +1,18 @@
-"""Session set-up: the driver-memory default, a new session runs no job, and
-the spark-submit --py-files launch runs a registered query."""
+"""Session set-up: the driver-memory default, a new session runs no job, the
+class archive's round trip and conf-dir rule, and the spark-submit
+--py-files launch runs a registered query."""
 
 import json
 import os
 import subprocess
 import sys
+import tempfile
+import textwrap
 
+from scidbgeo_spark import session
 from scidbgeo_spark.session import _driver_memory
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_driver_memory_is_40_percent_of_ram_in_whole_gib():
@@ -26,6 +32,82 @@ def test_new_session_runs_no_job():
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert r.stdout.splitlines()[-1] == "[]"
+
+
+# Three driver JVMs in one process: the first dumps the class archive, the
+# second maps it (its class-load log says where SparkContext came from),
+# the third finds garbage at the archive path.
+_ROUND_TRIP = textwrap.dedent(
+    """
+    import glob, json, os, tempfile
+    from scidbgeo_spark import session
+    tmp = tempfile.gettempdir()
+    session.stop_spark(session.get_spark(cores=1))
+    archives = glob.glob(os.path.join(tmp, "scidbgeo_cds_*.jsa"))
+    after_dump = sorted(os.listdir(tmp))
+    log = os.path.join(tmp, "class-load.log")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        f'--driver-java-options "-Xlog:class+load=info:file={log}" pyspark-shell')
+    session.stop_spark(session.get_spark(cores=1))
+    with open(log) as f:
+        source = [ln.split(" source: ")[1].strip() for ln in f
+                  if "] org.apache.spark.SparkContext source: " in ln]
+    with open(archives[0], "wb") as f:
+        f.write(os.urandom(4096))
+    del os.environ["PYSPARK_SUBMIT_ARGS"]
+    s = session.get_spark(cores=1)
+    rows = s.range(10).count()
+    session.stop_spark(s)
+    print(json.dumps({"archives": archives, "after_dump": after_dump,
+                      "source": source, "rows": rows,
+                      "after": sorted(os.listdir(tmp))}))
+    """
+)
+
+
+def test_class_archive_round_trip(tmp_path):
+    r = subprocess.run(
+        [sys.executable, "-c", _ROUND_TRIP], capture_output=True, text=True, timeout=600,
+        cwd=REPO, env={**os.environ, "TMPDIR": str(tmp_path), "SPARK_DRIVER_MEM": "1g"},
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    res = json.loads(r.stdout.splitlines()[-1])
+    assert len(res["archives"]) == 1  # the first session dumped and published
+    archive = os.path.basename(res["archives"][0])
+    assert res["after_dump"] == [archive, "scidbgeo_spark_conf"]
+    assert res["source"] == ["shared objects file (top)"]
+    assert res["rows"] == 10  # a garbage archive still gives a working session
+    assert not [f for f in res["after"] if f.endswith(".part")]
+
+
+def test_conf_dir_rule(tmp_path, monkeypatch):
+    """A conf dir of templates only is swapped for the engine's empty one;
+    one with a real file, or an extra class-path entry, launches with no
+    archive and keeps its conf dir."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for var in session._CLASSPATH_ENV:
+        monkeypatch.delenv(var, raising=False)
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf.template").write_text("spark.ui.enabled false\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    dump = session._class_archive()
+    own = os.environ["SPARK_CONF_DIR"]
+    assert own == str(tmp_path / "scidbgeo_spark_conf") and os.listdir(own) == []
+    assert dump.part.startswith(dump.path) and dump.part.endswith(".part")
+    assert "-XX:ArchiveClassesAtExit=" + dump.part in dump.java_options
+    open(dump.path, "wb").close()
+    mapped = session._class_archive()
+    assert mapped.path == dump.path and mapped.part is None
+    assert "-XX:SharedArchiveFile=" + dump.path in mapped.java_options
+
+    monkeypatch.setenv("HADOOP_CONF_DIR", str(conf))
+    assert session._class_archive() is None
+    monkeypatch.delenv("HADOOP_CONF_DIR")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    (conf / "spark-defaults.conf").write_text("spark.ui.enabled false\n")
+    assert session._class_archive() is None
+    assert os.environ["SPARK_CONF_DIR"] == str(conf)
 
 
 def test_spark_submit_pyfiles_launch(tmp_path):
