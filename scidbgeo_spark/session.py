@@ -8,49 +8,64 @@ and Hadoop classes from ``$SPARK_HOME/jars``.  A driver JVM that
 ``get_spark`` launches keeps them in a dynamic AppCDS archive (JDK 13+)
 and maps it into the next one:
 
-- The archive is ``scidbgeo_cds_<key>.jsa`` under
-  ``tempfile.gettempdir()`` (``TMPDIR``), about 100 MB.  The key hashes
-  the real path of ``JAVA_HOME`` and the name, size and mtime of every
-  jar, so another JDK or Spark install gets its own archive.
+- The archive is ``scidbgeo_cds_<key>.jsa``, about 100 MB, in
+  ``scidbgeo-<uid>`` under ``tempfile.gettempdir()`` (``TMPDIR``).  That
+  directory is made with mode 0700; when it is not the user's own, or
+  others may write to it, the JVM launches with no archive, since a
+  file planted there would be mapped into the JVM.  The key hashes the
+  JDK (the real path of ``JAVA_HOME``, and the size and mtime of its
+  ``release`` file and ``lib/modules``), the real path of
+  ``$SPARK_HOME/jars`` and the name, size and mtime of every jar in it,
+  the driver memory and ``PYSPARK_SUBMIT_ARGS``: another JDK build,
+  Spark install or set of launch options gets an archive of its own.
 - When the archive exists, the JVM maps it (``-XX:SharedArchiveFile``);
   on 4 CPUs a session then starts in about half the time.  A JVM that
-  cannot map it (another JDK, other jars or flags, a damaged file)
-  starts without it, and without the JDK's default archive, under the
-  default ``-Xshare:auto``.
+  cannot map it starts without it, under the default ``-Xshare:auto``.
+  When the file is damaged, that JVM also goes without the JDK's default
+  archive, so ``get_spark`` then deletes the file (it reads the JVM's
+  ``java.vm.info``, which no longer says ``sharing``), and the next
+  driver JVM writes a new one.
 - When it does not exist, the JVM records the classes it loads
   (``-XX:ArchiveClassesAtExit``) and writes them when it exits.  On 4
   CPUs that first session takes 8-15 s more to exit, and its JVM holds
   30-60 MB more resident memory.  It writes a file of its own,
-  ``<archive>.<id>.part``, which becomes the archive by ``os.replace``
-  only once the JVM has exited with code 0, so an archive is never
-  rewritten under a JVM that maps it.  That happens in ``stop_spark``, in the next ``get_spark`` of
-  the process, or at interpreter exit; concurrent first sessions each
-  write their own part, and the last to be published wins.
+  ``<archive>.<pid>.part`` after the Python process, which becomes the
+  archive by ``os.replace`` only once the JVM has exited with code 0,
+  so an archive is never rewritten under a JVM that maps it.  That
+  happens in ``stop_spark``, in the next ``get_spark`` of the process,
+  or at interpreter exit; concurrent first sessions each write their own
+  part, and the last to be published wins.  The part of a process that
+  died first is deleted by the next ``get_spark`` that looks for the
+  archive.
 - The JDK will not archive with a non-empty directory on the class path,
   and Spark's launcher puts the conf dir first on it.  So the archive is
   used only when the conf dir (``SPARK_CONF_DIR``, else
   ``$SPARK_HOME/conf``) holds nothing but ``*.template`` files, which a
-  launch does not read; ``SPARK_CONF_DIR`` is then pointed at an empty
-  directory next to the archive.  When the conf dir holds any other
-  file, or ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR`` or
-  ``SPARK_DIST_CLASSPATH`` adds to the class path, the JVM launches with
-  no archive.
+  launch does not read; ``SPARK_CONF_DIR`` is then pointed at the empty
+  ``conf`` dir next to the archive, and a file in that one also means no
+  archive.  When the deployment's conf dir holds any other file, or
+  ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR`` or ``SPARK_DIST_CLASSPATH``
+  adds to the class path, the JVM launches with no archive.
 
-To see that a session mapped the archive, add
-``-Xlog:class+load=info:file=<log>`` to ``--driver-java-options``: Spark's
-classes then read ``source: shared objects file (top)``.
+To see that a session mapped the archive, look for its path in
+``/proc/<pid>/maps`` of the driver JVM (``SparkContext._gateway.proc``).
+The JDK's reason for not mapping it is off the console
+(``-Xlog:cds*=off``); ``-Xlog:cds`` in ``--driver-java-options`` brings
+it back, in a session that, with those options, has an archive key of
+its own.
 """
 
 from __future__ import annotations
 
 import atexit
+import contextlib
 import hashlib
 import os
 import shlex
 import shutil
+import stat
 import subprocess
 import tempfile
-import uuid
 from typing import NamedTuple
 
 from pyspark import SparkContext
@@ -82,28 +97,78 @@ def _driver_memory(phys_bytes: int) -> str:
     return f"{min(48, max(1, phys_bytes * 2 // 5 // 2**30))}g"
 
 
-def _class_archive() -> _Archive | None:
-    """The class archive for a driver JVM launched now, or None when it
-    launches without one; points ``SPARK_CONF_DIR`` at the engine's empty
-    conf dir when the archive is used (see the module docstring)."""
+def _private_dir() -> str | None:
+    """``<tmp>/scidbgeo-<uid>``, made with mode 0700, holding the archive
+    and an empty ``conf`` dir; None when it is not this user's own
+    directory, when someone else may write to it, or when ``conf`` holds a
+    file: anything found there would run (``spark-env.sh``) or be mapped
+    into the JVM."""
+    d = os.path.join(tempfile.gettempdir(), f"scidbgeo-{os.getuid()}")
+    conf = os.path.join(d, "conf")
+    for path in (d, conf):
+        with contextlib.suppress(FileExistsError):
+            os.mkdir(path, 0o700)
+        st = os.lstat(path)
+        if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid() or st.st_mode & 0o022:
+            return None
+    return None if os.listdir(conf) else d
+
+
+def _key(home: str, mem: str) -> str:
+    """Hash of what decides whether a JVM can map an archive: the JDK
+    build, the jars, the driver memory ``mem`` and the launch options."""
+    java = os.path.realpath(os.environ.get("JAVA_HOME") or os.path.dirname(
+        os.path.dirname(os.path.realpath(shutil.which("java") or "/"))))
+    jars = os.path.realpath(os.path.join(home, "jars"))
+    key = hashlib.sha1(
+        "\0".join((java, jars, mem, os.environ.get("PYSPARK_SUBMIT_ARGS", ""))).encode())
+    # a JDK update in place rewrites its release file and module image
+    files = [os.path.join(java, "release"), os.path.join(java, "lib", "modules")]
+    files += sorted(e.path for e in os.scandir(jars))
+    for f in filter(os.path.isfile, files):
+        st = os.stat(f)
+        key.update(f"\0{f}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return key.hexdigest()[:16]
+
+
+def _alive(pid: int) -> bool:
+    """Whether process ``pid`` still runs."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    return True
+
+
+def _remove(path: str) -> None:
+    """Delete ``path``, which another process may have deleted first."""
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
+
+
+def _class_archive(mem: str) -> _Archive | None:
+    """The class archive for a driver JVM launched now with ``mem`` of
+    driver memory, or None when it launches without one; points
+    ``SPARK_CONF_DIR`` at the engine's empty conf dir when the archive is
+    used, and deletes the parts of processes that died (see the module
+    docstring)."""
     home = _find_spark_home()
     conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(home, "conf")
     if any(os.environ.get(v) for v in _CLASSPATH_ENV) or (
         os.path.isdir(conf) and not all(n.endswith(".template") for n in os.listdir(conf))
     ):
         return None
-    own = os.path.join(tempfile.gettempdir(), "scidbgeo_spark_conf")
-    os.makedirs(own, exist_ok=True)
-    os.environ["SPARK_CONF_DIR"] = own
-    java = os.environ.get("JAVA_HOME") or shutil.which("java") or ""
-    key = hashlib.sha1(os.path.realpath(java).encode())
-    for jar in sorted(os.scandir(os.path.join(home, "jars")), key=lambda e: e.name):
-        st = jar.stat()
-        key.update(f"\0{jar.name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
-    path = os.path.join(tempfile.gettempdir(), f"scidbgeo_cds_{key.hexdigest()[:16]}.jsa")
+    d = _private_dir()
+    if d is None:
+        return None
+    for n in os.listdir(d):  # a part is <archive>.<pid>.part
+        if n.endswith(".part") and not _alive(int(n.rsplit(".", 2)[1])):
+            _remove(os.path.join(d, n))
+    os.environ["SPARK_CONF_DIR"] = os.path.join(d, "conf")
+    path = os.path.join(d, f"scidbgeo_cds_{_key(home, mem)}.jsa")
     if os.path.exists(path):
         return _Archive(f"{shlex.quote('-XX:SharedArchiveFile=' + path)} {_QUIET}", path, None)
-    part = f"{path}.{uuid.uuid4().hex}.part"
+    part = f"{path}.{os.getpid()}.part"
     return _Archive(f"{shlex.quote('-XX:ArchiveClassesAtExit=' + part)} {_QUIET}", path, part)
 
 
@@ -115,8 +180,8 @@ def _publish() -> None:
         proc, part, path = dump
         if proc.returncode == 0 and os.path.exists(part):
             os.replace(part, path)
-        elif os.path.exists(part):
-            os.remove(part)
+        else:
+            _remove(part)
 
 
 @atexit.register
@@ -188,11 +253,15 @@ def get_spark(
     # a new driver JVM launches unless one is up, or spark-submit runs us
     archive = None
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        archive = _class_archive()
+        archive = _class_archive(mem)
     if archive:
         builder = builder.config("spark.driver.defaultJavaOptions", archive.java_options)
     spark = builder.getOrCreate()
     if archive and archive.part:
         _dumps.append((SparkContext._gateway.proc, archive.part, archive.path))
+    elif archive and "sharing" not in spark.sparkContext._jvm.System.getProperty("java.vm.info"):
+        # the JVM could not map the file, so it runs with no class sharing
+        # at all; remove it, and the next driver JVM writes a new one
+        _remove(archive.path)
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -34,33 +34,35 @@ def test_new_session_runs_no_job():
     assert r.stdout.splitlines()[-1] == "[]"
 
 
-# Three driver JVMs in one process: the first dumps the class archive, the
-# second maps it (its class-load log says where SparkContext came from),
-# the third finds garbage at the archive path.
+# Three driver JVMs in one process, all with the same launch options: the
+# first dumps the class archive, the second maps it (its class-load log
+# says where SparkContext came from), the third finds garbage at the
+# archive path.
 _ROUND_TRIP = textwrap.dedent(
     """
     import glob, json, os, tempfile
     from scidbgeo_spark import session
     tmp = tempfile.gettempdir()
-    session.stop_spark(session.get_spark(cores=1))
-    archives = glob.glob(os.path.join(tmp, "scidbgeo_cds_*.jsa"))
-    after_dump = sorted(os.listdir(tmp))
+    own = os.path.join(tmp, f"scidbgeo-{os.getuid()}")
     log = os.path.join(tmp, "class-load.log")
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
         f'--driver-java-options "-Xlog:class+load=info:file={log}" pyspark-shell')
     session.stop_spark(session.get_spark(cores=1))
+    archives = glob.glob(os.path.join(own, "scidbgeo_cds_*.jsa"))
+    after_dump = sorted(os.listdir(own))
+    session.stop_spark(session.get_spark(cores=1))
+    after_map = sorted(os.listdir(own))
     with open(log) as f:
         source = [ln.split(" source: ")[1].strip() for ln in f
                   if "] org.apache.spark.SparkContext source: " in ln]
     with open(archives[0], "wb") as f:
         f.write(os.urandom(4096))
-    del os.environ["PYSPARK_SUBMIT_ARGS"]
     s = session.get_spark(cores=1)
     rows = s.range(10).count()
     session.stop_spark(s)
     print(json.dumps({"archives": archives, "after_dump": after_dump,
-                      "source": source, "rows": rows,
-                      "after": sorted(os.listdir(tmp))}))
+                      "after_map": after_map, "source": source, "rows": rows,
+                      "after": sorted(os.listdir(own))}))
     """
 )
 
@@ -74,39 +76,72 @@ def test_class_archive_round_trip(tmp_path):
     res = json.loads(r.stdout.splitlines()[-1])
     assert len(res["archives"]) == 1  # the first session dumped and published
     archive = os.path.basename(res["archives"][0])
-    assert res["after_dump"] == [archive, "scidbgeo_spark_conf"]
+    assert res["after_dump"] == ["conf", archive]  # and left no part
+    assert res["after_map"] == res["after_dump"]  # a mapped archive stays
     assert res["source"] == ["shared objects file (top)"]
     assert res["rows"] == 10  # a garbage archive still gives a working session
-    assert not [f for f in res["after"] if f.endswith(".part")]
+    assert res["after"] == ["conf"]  # and is deleted, so the next one dumps
 
 
 def test_conf_dir_rule(tmp_path, monkeypatch):
     """A conf dir of templates only is swapped for the engine's empty one;
     one with a real file, or an extra class-path entry, launches with no
-    archive and keeps its conf dir."""
+    archive and keeps its conf dir.  So does a private dir that is not the
+    user's alone or whose conf dir holds a file.  Another JDK build or
+    other launch options give another archive, and the part of a process
+    that died is deleted."""
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    for var in session._CLASSPATH_ENV:
+    for var in (*session._CLASSPATH_ENV, "PYSPARK_SUBMIT_ARGS"):
         monkeypatch.delenv(var, raising=False)
+    jdk = tmp_path / "jdk"
+    jdk.mkdir()
+    (jdk / "release").write_text('JAVA_RUNTIME_VERSION="17.0.1+1"\n')
+    monkeypatch.setenv("JAVA_HOME", str(jdk))
     conf = tmp_path / "conf"
     conf.mkdir()
     (conf / "spark-defaults.conf.template").write_text("spark.ui.enabled false\n")
     monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
-    dump = session._class_archive()
-    own = os.environ["SPARK_CONF_DIR"]
-    assert own == str(tmp_path / "scidbgeo_spark_conf") and os.listdir(own) == []
-    assert dump.part.startswith(dump.path) and dump.part.endswith(".part")
+    own = tmp_path / f"scidbgeo-{os.getuid()}"
+    dead = subprocess.Popen(["true"])
+    dead.wait()
+    (own / "conf").mkdir(parents=True)
+    stale = own / f"scidbgeo_cds_0.jsa.{dead.pid}.part"
+    live = own / f"scidbgeo_cds_0.jsa.{os.getpid()}.part"
+    stale.touch()
+    live.touch()
+    dump = session._class_archive("1g")
+    assert os.environ["SPARK_CONF_DIR"] == str(own / "conf")
+    assert sorted(os.listdir(own)) == ["conf", live.name]
+    assert dump.part == f"{dump.path}.{os.getpid()}.part"
+    assert os.path.dirname(dump.path) == str(own)
     assert "-XX:ArchiveClassesAtExit=" + dump.part in dump.java_options
     open(dump.path, "wb").close()
-    mapped = session._class_archive()
+    mapped = session._class_archive("1g")
     assert mapped.path == dump.path and mapped.part is None
     assert "-XX:SharedArchiveFile=" + dump.path in mapped.java_options
+    assert session._class_archive("2g").path != dump.path
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--driver-class-path x.jar pyspark-shell")
+    assert session._class_archive("1g").path != dump.path
+    monkeypatch.delenv("PYSPARK_SUBMIT_ARGS")
+    (jdk / "release").write_text('JAVA_RUNTIME_VERSION="17.0.20+8"\n')
+    assert session._class_archive("1g").path != dump.path
 
-    monkeypatch.setenv("HADOOP_CONF_DIR", str(conf))
-    assert session._class_archive() is None
-    monkeypatch.delenv("HADOOP_CONF_DIR")
+    # the deployment's conf dir stays template-only from here on
     monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    (own / "conf" / "spark-env.sh").write_text("echo planted\n")
+    assert session._class_archive("1g") is None
+    (own / "conf" / "spark-env.sh").unlink()
+    own.chmod(0o777)
+    assert session._class_archive("1g") is None
+    own.chmod(0o700)
+    assert session._class_archive("1g") is not None
+
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    monkeypatch.setenv("HADOOP_CONF_DIR", str(conf))
+    assert session._class_archive("1g") is None
+    monkeypatch.delenv("HADOOP_CONF_DIR")
     (conf / "spark-defaults.conf").write_text("spark.ui.enabled false\n")
-    assert session._class_archive() is None
+    assert session._class_archive("1g") is None
     assert os.environ["SPARK_CONF_DIR"] == str(conf)
 
 
