@@ -12,20 +12,21 @@ from identical rows.
 
 from __future__ import annotations
 
+import atexit
 import os
 import sys
 import tempfile
 import zipfile
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:  # driver-side import when loaded by file path
     sys.path.insert(0, _REPO)
 
-from scidbgeo_spark import fixtures, model, oracle, tiling
+from scidbgeo_spark import fixtures, model, oracle, session, tiling
 from scidbgeo_spark.model import CHUNK
 from scidbgeo_spark.operators import (
     curation,
@@ -49,9 +50,14 @@ def _ensure_pyfiles(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_scidbgeo_pyfiles", False):
         return
+    # one zip per driver process, deleted as it exits; here go the zips
+    # of processes that died before they could delete theirs
+    tmp = tempfile.gettempdir()
+    session.remove_orphans(tmp, r"scidbgeo_spark_pyfiles_(\d+)\.zip")
     # always rebuild: a recycled pid (or an edited package) must never
     # ship a stale zip to the workers
-    zpath = os.path.join(tempfile.gettempdir(), f"scidbgeo_spark_pyfiles_{os.getpid()}.zip")
+    zpath = os.path.join(tmp, f"scidbgeo_spark_pyfiles_{os.getpid()}.zip")
+    atexit.register(session.remove_file, zpath)
     pkg = os.path.join(_REPO, "scidbgeo_spark")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg):
@@ -103,11 +109,11 @@ def _rect_zone(h: int, w: int):
     return zonal.rect_zone(h, w, fixtures.ZONE_H, fixtures.ZONE_W)
 
 
-def _rect_cells(coo: DataFrame, h: int, w: int, *cols: str) -> DataFrame:
-    """Zoned cells (id, *cols, v) of a COO raster under the rect-grid
-    layer: the zone id is arithmetic on each row — no zone tiles, no
-    join (polygon layers keep zone tiles)."""
-    return coo.select(_rect_zone(h, w).alias("id"), *cols, F.col("value").alias("v"))
+def _zoned_cells(coo: DataFrame, zone: Column, *cols: str) -> DataFrame:
+    """Zoned cells (id, *cols, v) of a COO raster under a driver-side
+    layer: the zone column (``zonal.rect_zone`` or ``zonal.zone_expr``)
+    is evaluated on each row — no zone tiles, no join."""
+    return coo.select(zone.alias("id"), *cols, F.col("value").alias("v"))
 
 
 def _rect_zones_coo(spark: SparkSession, h: int, w: int) -> DataFrame:
@@ -448,14 +454,13 @@ def q_redimension_roundtrip_3d(spark, sf_dir):
 
 def q_zonal_stats_rect(spark, sf_dir):
     h, w = model.raster_dims(spark, sf_dir)
-    cells = _rect_cells(model.raster_coo(spark, sf_dir), h, w)
+    cells = _zoned_cells(model.raster_coo(spark, sf_dir), _rect_zone(h, w))
     return zonal.zonal_stats(cells, ["id"])
 
 
 def q_zonal_stats_poly(spark, sf_dir):
-    tiles, h, w = _raster_tiles(spark, sf_dir)
-    zt = zonal.rasterize_polygons(spark, fixtures.MIXED_POLYGONS, h, w, CHUNK)
-    return zonal.zonal_stats_tiles(tiles, zt)
+    zone = zonal.zone_expr(fixtures.MIXED_POLYGONS)
+    return zonal.zonal_stats(_zoned_cells(model.raster_coo(spark, sf_dir), zone), ["id"])
 
 
 def q_matmul(spark, sf_dir):
@@ -537,7 +542,7 @@ def q_zonal_stats_time(spark, sf_dir):
 
     coo3 = model.raster3_coo(spark, sf_dir)
     _, h3, _ = model.raster3_dims(spark, sf_dir)
-    return zonal.zonal_stats_time(_rect_cells(coo3, h3, RASTER3_W, "band"))
+    return zonal.zonal_stats_time(_zoned_cells(coo3, _rect_zone(h3, RASTER3_W), "band"))
 
 
 def q_zonal_change(spark, sf_dir):
@@ -554,7 +559,7 @@ def q_zonal_change(spark, sf_dir):
     delta = a.alias("a").join(b.alias("b"), ["y", "x"]).select(
         "y", "x", (F.col("b.value") - F.col("a.value")).alias("value")
     )
-    return zonal.zonal_stats(_rect_cells(delta, h3, RASTER3_W), ["id"])
+    return zonal.zonal_stats(_zoned_cells(delta, _rect_zone(h3, RASTER3_W)), ["id"])
 
 
 def q_traffic_spikes(spark, sf_dir):
@@ -939,7 +944,7 @@ def q_zonal_stats_float(spark, sf_dir):
         F.col("value"),
     )
     h, w = model.raster_dims(spark, sf_dir)
-    return _rect_cells(coo, h, w).groupBy("id").agg(
+    return _zoned_cells(coo, _rect_zone(h, w)).groupBy("id").agg(
         F.min("v").alias("min_value"),
         F.max("v").alias("max_value"),
         F.count("v").alias("count_value"),
@@ -952,7 +957,7 @@ def q_zonal_median(spark, sf_dir):
     DuckDB quantile_cont bitwise on integer inputs.  An aggregate class
     the reference's grouped_aggregate surface lacks."""
     h, w = model.raster_dims(spark, sf_dir)
-    cells = _rect_cells(model.raster_coo(spark, sf_dir), h, w)
+    cells = _zoned_cells(model.raster_coo(spark, sf_dir), _rect_zone(h, w))
     return cells.groupBy("id").agg(
         F.expr("percentile(v, 0.5)").alias("median_value"),
         F.expr("percentile(v, 0.9)").alias("p90_value"),
@@ -964,21 +969,21 @@ def q_zonal_var(spark, sf_dir):
     with one closing division (and IEEE-exact sqrt), so the float
     results are bitwise across engines."""
     h, w = model.raster_dims(spark, sf_dir)
-    return zonal.zonal_variance(_rect_cells(model.raster_coo(spark, sf_dir), h, w))
+    return zonal.zonal_variance(_zoned_cells(model.raster_coo(spark, sf_dir), _rect_zone(h, w)))
 
 
 def q_zonal_mode(spark, sf_dir):
     """Zonal MAJORITY (mode) per zone — the (zone, value) histogram
     shuffles as counts, one window picks the argmax."""
     h, w = model.raster_dims(spark, sf_dir)
-    return zonal.zonal_mode(_rect_cells(model.raster_coo(spark, sf_dir), h, w))
+    return zonal.zonal_mode(_zoned_cells(model.raster_coo(spark, sf_dir), _rect_zone(h, w)))
 
 
 def q_zonal_histogram(spark, sf_dir):
     """Per-zone pixel-value HISTOGRAM (grouped_aggregate over (zone,
     value) — the distribution view of zonal statistics)."""
     h, w = model.raster_dims(spark, sf_dir)
-    cells = _rect_cells(model.raster_coo(spark, sf_dir), h, w)
+    cells = _zoned_cells(model.raster_coo(spark, sf_dir), _rect_zone(h, w))
     return cells.groupBy("id", F.col("v").alias("value")).agg(F.count("*").alias("n"))
 
 
@@ -2584,7 +2589,7 @@ def q_areal_interp(spark, sf_dir):
     zh, zw = fixtures.ZONE_H, fixtures.ZONE_W
     nzx, nzy = w // zw, h // zh
     a = (
-        _rect_cells(coo, h, w)
+        _zoned_cells(coo, _rect_zone(h, w))
         .filter(F.col("id") != NODATA_ZONE)
         .groupBy(F.col("id").alias("zid_a"))
         .agg(F.sum("v").alias("value"))
@@ -2935,7 +2940,7 @@ def q_zonal_iqr(spark, sf_dir):
     the exact percentile aggregate, then one broadcast join-back of the
     tiny per-zone fence table to count pixels beyond 1.5 IQR."""
     h, w = model.raster_dims(spark, sf_dir)
-    flat = _rect_cells(model.raster_coo(spark, sf_dir), h, w)
+    flat = _zoned_cells(model.raster_coo(spark, sf_dir), _rect_zone(h, w))
     q = flat.groupBy("id").agg(
         F.expr("percentile(v, 0.25)").alias("p25"),
         F.expr("percentile(v, 0.75)").alias("p75"),

@@ -179,41 +179,8 @@ def points_in_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarr
     return inside
 
 
-class PolyPack:
-    """Polygon layer packed into flat NumPy arrays: one pickle, vectorized
-    bbox queries.  This is what rides the Spark broadcast (a list of 40k
-    tiny arrays costs seconds per python worker to unpickle; one packed
-    struct costs milliseconds)."""
-
-    __slots__ = ("zids", "bbox", "offsets", "coords")
-
-    def __init__(self, polygons: list[tuple[int, np.ndarray]]):
-        self.zids = np.array([z for z, _ in polygons], dtype=np.int64)
-        rings = [np.asarray(r, dtype=np.float64) for _, r in polygons]
-        self.offsets = np.zeros(len(rings) + 1, dtype=np.int64)
-        np.cumsum([len(r) for r in rings], out=self.offsets[1:])
-        self.coords = (
-            np.concatenate(rings) if rings else np.zeros((0, 2), dtype=np.float64)
-        )
-        self.bbox = np.array(
-            [[r[:, 0].min(), r[:, 1].min(), r[:, 0].max(), r[:, 1].max()] for r in rings],
-            dtype=np.float64,
-        ).reshape(len(rings), 4)
-
-    def ring(self, i: int) -> np.ndarray:
-        return self.coords[self.offsets[i] : self.offsets[i + 1]]
-
-    def overlapping(self, x0: float, y0: float, x1: float, y1: float) -> np.ndarray:
-        """Indices of polygons whose bbox intersects [x0,x1)x[y0,y1),
-        in burn order (index order)."""
-        b = self.bbox
-        return np.nonzero(
-            (b[:, 0] < x1) & (b[:, 2] > x0) & (b[:, 1] < y1) & (b[:, 3] > y0)
-        )[0]
-
-
 def rasterize_tile(
-    y0: int, x0: int, h: int, w: int, polygons: "PolyPack | list[tuple[int, np.ndarray]]"
+    y0: int, x0: int, h: int, w: int, polygons: list[tuple[int, np.ndarray]]
 ) -> np.ndarray:
     """Burn zone ids into an h×w tile at pixel centers (row-major int32).
 
@@ -221,12 +188,13 @@ def rasterize_tile(
     semantics; pixels outside every polygon get NODATA_ZONE.  Later
     polygons overwrite earlier ones (GDAL burn order).  Work per polygon
     is cropped to the polygon-bbox x tile intersection, so dense polygon
-    layers (many small zones) cost O(covered pixels), not O(tile pixels).
+    layers (many small zones) cost O(covered pixels), not O(tile pixels),
+    and rings outside the tile cost nothing.
     """
-    pack = polygons if isinstance(polygons, PolyPack) else PolyPack(polygons)
     out = np.full(h * w, NODATA_ZONE, dtype=np.int32)
-    for i in pack.overlapping(x0, y0, x0 + w, y0 + h):
-        xmin, ymin, xmax, ymax = pack.bbox[i]
+    for zid, ring in polygons:
+        ring = np.asarray(ring, dtype=np.float64)
+        (xmin, ymin), (xmax, ymax) = ring.min(axis=0), ring.max(axis=0)
         xa = max(x0, int(np.floor(xmin - 1)))
         xb = min(x0 + w, int(np.ceil(xmax + 1)))
         ya = max(y0, int(np.floor(ymin - 1)))
@@ -237,10 +205,10 @@ def rasterize_tile(
         hit = points_in_ring(
             (xx + 0.5).ravel().astype(np.float64),
             (yy + 0.5).ravel().astype(np.float64),
-            pack.ring(i),
+            ring,
         )
         idx = ((yy - y0) * w + (xx - x0)).ravel()[hit]
-        out[idx] = pack.zids[i]
+        out[idx] = zid
     return out
 
 

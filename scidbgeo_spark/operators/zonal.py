@@ -8,10 +8,11 @@ then ``grouped_aggregate(min,max,avg,count by id)``.
 Spark-native re-expression: two front ends produce zoned cells
 ``(id, v[, band])`` for one aggregate, :func:`zonal_stats`.
 
-1. **rect-grid layer**: the zone id is integer arithmetic on the COO
-   rows (:func:`rect_zone`) — no rasterize, no zone tiles, no join
+1. **driver-side layers**: the zone id is a Catalyst column on the COO
+   rows, :func:`rect_zone` for the rect grid, :func:`zone_expr` for a
+   ``(zone_id, ring)`` list — no rasterize, no zone tiles, no join
    (Raptor, VLDB 2019: zonal statistics need no rasterized layer).
-2. **polygon layers**: a per-tile ray-cast kernel burns zone tiles;
+2. **DataFrame layers**: a per-tile ray-cast kernel burns zone tiles;
    :func:`zone_cells` equi-joins them to the raster tiles on chunk
    keys — the positional join becomes chunk join + array-index math.
 
@@ -27,7 +28,8 @@ broadcast-right hash join.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -41,6 +43,61 @@ from scidbgeo_spark.tiling import TILE_KEYS
 ZONE_TILE_SCHEMA = "tile_y int, tile_x int, y0 long, x0 long, h int, w int, zid array<int>"
 
 
+def zone_expr(polygons, y: Column | str = "y", x: Column | str = "x") -> Column:
+    """Zone id (BIGINT) of cell (y, x) under a driver-side polygon layer
+    ``[(zone_id, ring), ...]``: ``kernels.rasterize_tile`` compiled into
+    one ``CASE``, equal to it on every cell (pinned by tests).
+
+    Branches run in reverse burn order, so the last polygon wins.  Each
+    is guarded by the kernel's integer crop of the ring's bbox, then runs
+    ``points_in_ring`` unrolled at the pixel centre (x + 0.5, y + 0.5) in
+    double literals and NumPy's operation order, so every comparison sees
+    the kernel's bits.  Other cells get NODATA_ZONE."""
+    y = F.col(y) if isinstance(y, str) else y
+    x = F.col(x) if isinstance(x, str) else x
+    px = x.cast("double") + 0.5
+    py = y.cast("double") + 0.5
+    zone = None
+    for zid, ring in reversed(polygons):
+        ring = np.asarray(ring, dtype=np.float64)
+        inside = None
+        for (a, b), (c, d) in zip(ring, np.roll(ring, -1, axis=0)):
+            if b == d:  # horizontal edge: never crosses the horizontal ray
+                continue
+            xint = float(a) + (py - float(b)) * float(c - a) / float(d - b)
+            # (b > py) != (d > py), with b and d known
+            hit = (py >= float(min(b, d))) & (py < float(max(b, d))) & (px < xint)
+            inside = hit if inside is None else inside != hit
+        if inside is None:
+            continue
+        (xmin, ymin), (xmax, ymax) = ring.min(axis=0), ring.max(axis=0)
+        cond = (x >= math.floor(xmin - 1)) & (x < math.ceil(xmax + 1))
+        cond &= (y >= math.floor(ymin - 1)) & (y < math.ceil(ymax + 1)) & inside
+        zone = F.when(cond, int(zid)) if zone is None else zone.when(cond, int(zid))
+    zone = F.lit(NODATA_ZONE) if zone is None else zone.otherwise(F.lit(NODATA_ZONE))
+    return zone.cast("long")
+
+
+def _zone_tiles(
+    spark: SparkSession,
+    height: int,
+    width: int,
+    chunk: int,
+    zone: Callable[[Column, Column], Column],
+) -> DataFrame:
+    """Zone tiles (``ZONE_TILE_SCHEMA``) of the zone column ``zone(y, x)``
+    over every cell of each tile, in one higher-order ``transform``."""
+    grid = tiling.tile_grid(spark, height, width, chunk)
+    cells = F.sequence(F.lit(0), F.col("h") * F.col("w") - 1)
+
+    def zid(i: Column) -> Column:
+        y = F.col("y0") + F.call_function("div", i, F.col("w"))
+        x = F.col("x0") + i % F.col("w")
+        return zone(y, x).cast("int")
+
+    return grid.withColumn("zid", F.transform(cells, zid))
+
+
 def rasterize_polygons(
     spark: SparkSession,
     polygons,
@@ -48,30 +105,16 @@ def rasterize_polygons(
     width: int,
     chunk: int,
 ) -> DataFrame:
-    """Polygon layer -> zone-id tile table (pixel-center inclusion).
+    """Polygon layer ``[(zone_id, ring), ...]`` -> zone-id tile table
+    (pixel-center inclusion): :func:`zone_expr` over every cell of each tile.
 
     Replaces ParallelRasterization/BigRasterization
     (SciDBParallel.py:935-961, 795-897): instead of mp.Pool workers writing
     per-instance COO files, each Spark task rasterizes the chunks of its
-    partition; polygons ride along as one packed broadcast variable
-    (``polygons`` may be a (zone_id, ring) list or a prebuilt PolyPack).
-    """
-    from scidbgeo_spark.kernels import PolyPack
-
-    grid = tiling.tile_grid(spark, height, width, chunk)
-    pack = polygons if isinstance(polygons, PolyPack) else PolyPack(polygons)
-    bc = spark.sparkContext.broadcast(pack)
-
-    def _rasterize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        polys = bc.value
-        for pdf in batches:
-            zids = [
-                rasterize_tile(int(r.y0), int(r.x0), int(r.h), int(r.w), polys)
-                for r in pdf.itertuples()
-            ]
-            yield pdf.assign(zid=zids)
-
-    return grid.mapInPandas(_rasterize, schema=ZONE_TILE_SCHEMA)
+    partition.  No registered query takes this path (zonal queries put
+    :func:`zone_expr` on their COO rows); perfbench's traced
+    ``zonal.rasterize_poly_s`` span times it."""
+    return _zone_tiles(spark, height, width, chunk, lambda y, x: zone_expr(polygons, y, x))
 
 
 def rect_zone(
@@ -120,25 +163,19 @@ def rasterize_rect_grid(
     zone_w: int,
 ) -> DataFrame:
     """Zone tiles for the full-grid rectangle layer: :func:`rect_zone`
-    over every cell of each tile, in one higher-order ``transform`` (no
-    Python rasterize stage).
+    over every cell of each tile.
 
-    Bit-identical to ``rasterize_polygons(rect_grid_polygons(h, w))``
+    Equal to ``kernels.rasterize_tile`` over ``rect_grid_polygons(h, w)``
     (pinned by the kernel-parity test).  No registered query takes this
     path — rect-grid zonal queries put :func:`rect_zone` on their COO
     rows instead; the callers that want zone TILES are the phase-timed
     ``cli.run_zonal``, the ``rasterize`` stage of
     ``plans.lineage``'s checkpointed pipeline, ``tools/scale_smoke.py``
     and perfbench's traced ``zonal.rasterize_rect_s`` span."""
-    grid = tiling.tile_grid(spark, height, width, chunk)
-    cells = F.sequence(F.lit(0), F.col("h") * F.col("w") - 1)
-
-    def zid(i: Column) -> Column:
-        y = F.col("y0") + F.call_function("div", i, F.col("w"))
-        x = F.col("x0") + i % F.col("w")
-        return rect_zone(height, width, zone_h, zone_w, y, x).cast("int")
-
-    return grid.withColumn("zid", F.transform(cells, zid))
+    return _zone_tiles(
+        spark, height, width, chunk,
+        lambda y, x: rect_zone(height, width, zone_h, zone_w, y, x),
+    )
 
 
 def zonal_stats(cells: DataFrame, keys: list[str]) -> DataFrame:
@@ -169,7 +206,8 @@ def zonal_stats(cells: DataFrame, keys: list[str]) -> DataFrame:
 
 def zone_cells(raster_tiles: DataFrame, zone_tiles: DataFrame) -> DataFrame:
     """Zoned cells ``(id, v[, band])`` of a raster under a zone-tile
-    layer: the polygon-layer front end of every zonal operator.
+    layer: the front end for DataFrame layers (:func:`rasterize_layer_df`)
+    and other zone tiles; driver-side layers need none (module docstring).
 
     The positional join is an equi-join at chunk granularity (a 3-D
     raster's every band joins the one 2-D zone raster by the spatial
@@ -308,16 +346,14 @@ def rasterize_layer_df(
     chunk: int,
 ) -> DataFrame:
     """Distributed rasterize for a DataFrame polygon layer ``(zone_id,
-    xs, ys)`` — the millions-of-polygons shape `rasterize_polygons`'s
-    whole-layer driver broadcast cannot reach: every tile joins ONLY
+    xs, ys)`` — the millions-of-polygons shape `zone_expr`'s one
+    whole-layer ``CASE`` cannot reach: every tile joins ONLY
     the rings whose bbox overlaps it (rings explode to overlapped tile
     keys, then a hash equi-join), and each task burns its tile from
     that pruned set.  Burn
     order is ascending zone_id (the driver-list path burns in list
     order; fixtures list zones ascending, pinned by the parity test).
     Tiles no ring overlaps burn straight to the nodata zone."""
-    from scidbgeo_spark.kernels import PolyPack, rasterize_tile
-
     nty = -(-height // chunk)
     ntx = -(-width // chunk)
     grid = tiling.tile_grid(spark, height, width, chunk)
@@ -365,12 +401,10 @@ def rasterize_layer_df(
         first = pdf.iloc[0]
         y0, x0, h, w = int(first.y0), int(first.x0), int(first.h), int(first.w)
         hit = pdf[pdf.zid_in.notna()].sort_values("zid_in")
-        polys = PolyPack(
-            [
-                (int(r.zid_in), np.column_stack((np.asarray(r.xs), np.asarray(r.ys))))
-                for r in hit.itertuples()
-            ]
-        )
+        polys = [
+            (int(r.zid_in), np.column_stack((np.asarray(r.xs), np.asarray(r.ys))))
+            for r in hit.itertuples()
+        ]
         zid = rasterize_tile(y0, x0, h, w, polys)
         return pd.DataFrame(
             {

@@ -37,6 +37,11 @@ and maps it into the next one:
   part, and the last to be published wins.  The part of a process that
   died first is deleted by the next ``get_spark`` that looks for the
   archive.
+- A ``get_spark`` that maps the archive sets its mtime to now.  Each
+  one that looks for it deletes the archives of other keys whose mtime
+  is more than ``ARCHIVE_DAYS`` old: each is 100-200 MB, and a JDK
+  update or a run with other launch options would otherwise leave one
+  behind for good.
 - The JDK will not archive with a non-empty directory on the class path,
   and Spark's launcher puts the conf dir first on it.  So the archive is
   used only when the conf dir (``SPARK_CONF_DIR``, else
@@ -61,11 +66,13 @@ import atexit
 import contextlib
 import hashlib
 import os
+import re
 import shlex
 import shutil
 import stat
 import subprocess
 import tempfile
+import time
 from typing import NamedTuple
 
 from pyspark import SparkContext
@@ -79,6 +86,8 @@ _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 # -Xlog:cds=off leaves the [cds,dynamic] warnings on: the gateway JVM
 # shares this process's stdout
 _QUIET = "-Xlog:cds*=off"
+# an archive of another key unused this long is deleted
+ARCHIVE_DAYS = 7
 # (JVM, part, archive) of each dumping driver JVM not yet published: the
 # JVMs belong to the process, as SparkContext's gateway does
 _dumps: list[tuple[subprocess.Popen, str, str]] = []
@@ -140,17 +149,28 @@ def _alive(pid: int) -> bool:
     return True
 
 
-def _remove(path: str) -> None:
+def remove_file(path: str) -> None:
     """Delete ``path``, which another process may have deleted first."""
     with contextlib.suppress(FileNotFoundError):
         os.remove(path)
+
+
+def remove_orphans(d: str, pattern: str) -> None:
+    """Delete the files in ``d`` whose whole name matches ``pattern``, whose
+    one group is the pid of the process that wrote the file, when that
+    process no longer runs."""
+    for n in os.listdir(d):
+        m = re.fullmatch(pattern, n)
+        if m and not _alive(int(m.group(1))):
+            remove_file(os.path.join(d, n))
 
 
 def _class_archive(mem: str) -> _Archive | None:
     """The class archive for a driver JVM launched now with ``mem`` of
     driver memory, or None when it launches without one; points
     ``SPARK_CONF_DIR`` at the engine's empty conf dir when the archive is
-    used, and deletes the parts of processes that died (see the module
+    used, and deletes the parts of processes that died and the archives
+    of other keys unused for ``ARCHIVE_DAYS`` (see the module
     docstring)."""
     home = _find_spark_home()
     conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(home, "conf")
@@ -161,12 +181,16 @@ def _class_archive(mem: str) -> _Archive | None:
     d = _private_dir()
     if d is None:
         return None
-    for n in os.listdir(d):  # a part is <archive>.<pid>.part
-        if n.endswith(".part") and not _alive(int(n.rsplit(".", 2)[1])):
-            _remove(os.path.join(d, n))
+    remove_orphans(d, r".*\.(\d+)\.part")  # a part is <archive>.<pid>.part
     os.environ["SPARK_CONF_DIR"] = os.path.join(d, "conf")
     path = os.path.join(d, f"scidbgeo_cds_{_key(home, mem)}.jsa")
-    if os.path.exists(path):
+    stale = time.time() - ARCHIVE_DAYS * 86400
+    for e in os.scandir(d):  # another process may delete it first
+        with contextlib.suppress(FileNotFoundError):
+            if e.name.endswith(".jsa") and e.path != path and e.stat().st_mtime < stale:
+                os.remove(e.path)
+    with contextlib.suppress(FileNotFoundError):
+        os.utime(path)  # the archive exists: mark it used, and map it
         return _Archive(f"{shlex.quote('-XX:SharedArchiveFile=' + path)} {_QUIET}", path, None)
     part = f"{path}.{os.getpid()}.part"
     return _Archive(f"{shlex.quote('-XX:ArchiveClassesAtExit=' + part)} {_QUIET}", path, part)
@@ -181,7 +205,7 @@ def _publish() -> None:
         if proc.returncode == 0 and os.path.exists(part):
             os.replace(part, path)
         else:
-            _remove(part)
+            remove_file(part)
 
 
 @atexit.register
@@ -262,6 +286,6 @@ def get_spark(
     elif archive and "sharing" not in spark.sparkContext._jvm.System.getProperty("java.vm.info"):
         # the JVM could not map the file, so it runs with no class sharing
         # at all; remove it, and the next driver JVM writes a new one
-        _remove(archive.path)
+        remove_file(archive.path)
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -1642,34 +1642,60 @@ def test_events_ohlc_tiebreak_on_event_id(spark):
 
 
 def test_rasterize_rect_grid_jvm_matches_kernel_path(spark):
-    """The JVM codegen fast path for the full-grid rectangle layer is
-    bit-identical to the ray-cast kernel on rasterize_polygons — tile
-    keys, geometry columns, and every zid element, including rasters
-    whose extent does not divide evenly by the zone size (trailing
-    pixels burn to the nodata zone on both paths).  The shared rule,
-    rect_zone over every (y, x), equals the kernel tiles unpacked."""
+    """The rect-grid zone tiles — rect_zone, the rule the rect-zone
+    queries put on COO rows, over every (y, x) — equal the ray-cast
+    kernel's NumPy tiles: tile geometry and every zid element, including
+    rasters whose extent does not divide evenly by the zone size
+    (trailing pixels burn to the nodata zone on both paths)."""
+    from scidbgeo_spark.kernels import rasterize_tile
+
     for h, w, ch in [(100, 100, 50), (130, 97, 50), (45, 60, 32), (20, 20, 50)]:
-        kernel = zonal.rasterize_polygons(
-            spark, fixtures.rect_grid_polygons(h, w), h, w, ch
-        )
-        want = {
-            (r.tile_y, r.tile_x, r.y0, r.x0, r.h, r.w): list(r.zid)
-            for r in kernel.collect()
-        }
-        got = {
-            (r.tile_y, r.tile_x, r.y0, r.x0, r.h, r.w): list(r.zid)
-            for r in zonal.rasterize_rect_grid(
-                spark, h, w, ch, fixtures.ZONE_H, fixtures.ZONE_W
-            ).collect()
-        }
-        assert got == want, (h, w, ch)
-        cells = spark.range(h * w).select(
-            F.expr(f"id DIV {w}").alias("y"), (F.col("id") % w).alias("x")
-        )
-        zone = zonal.rect_zone(h, w, fixtures.ZONE_H, fixtures.ZONE_W)
-        got = {(r.y, r.x): r.id for r in cells.select("y", "x", zone.alias("id")).collect()}
-        want = {
-            (r.y, r.x): r.id
-            for r in tiling.tiles_to_coo(kernel.withColumnRenamed("zid", "px"), "id").collect()
-        }
-        assert got == want, (h, w)
+        polys = fixtures.rect_grid_polygons(h, w)
+        tiles = zonal.rasterize_rect_grid(
+            spark, h, w, ch, fixtures.ZONE_H, fixtures.ZONE_W
+        ).collect()
+        assert sorted((r.tile_y, r.tile_x) for r in tiles) == [
+            (ty, tx) for ty in range(-(-h // ch)) for tx in range(-(-w // ch))
+        ]
+        for r in tiles:
+            y0, x0 = r.tile_y * ch, r.tile_x * ch
+            assert (r.y0, r.x0, r.h, r.w) == (y0, x0, min(ch, h - y0), min(ch, w - x0))
+            want = rasterize_tile(y0, x0, r.h, r.w, polys).tolist()
+            assert list(r.zid) == want, (h, w, ch, r.tile_y, r.tile_x)
+
+
+def test_zone_expr_matches_kernel(spark):
+    """zone_expr equals kernels.rasterize_tile on every cell, and
+    rasterize_polygons' tiles equal the kernel's, over a seeded layer of
+    rings with non-integer vertices and diagonal edges, overlapping in
+    burn order, plus pixel centres exactly on half-open edges and
+    vertices: a half-integer rectangle, a diagonal through pixel
+    centres where the crossing's operation order decides, a closed ring
+    and a ring past the raster's edge."""
+    from scidbgeo_spark.kernels import rasterize_tile
+
+    h, w = 48, 45
+    rng = np.random.default_rng(7)
+    polys = [
+        (zid, rng.uniform(-4.0, 50.0, (int(rng.integers(3, 8)), 2)))
+        for zid in range(1, 9)
+    ]
+    polys += [
+        (9, np.array([(10.5, 5.5), (20.5, 5.5), (20.5, 15.5), (10.5, 15.5)])),
+        # the crossing at y = 21 is x = 27.5 in NumPy's order, and
+        # 27.500000000000004 with (c - a) / (d - b) taken first
+        (10, np.array([(0.5, 0.5), (36.5, 28.5), (0.5, 28.5)])),
+        (11, np.array([(30.0, 2.0), (44.0, 2.0), (37.0, 20.0), (30.0, 2.0)])),
+        (12, np.array([(40.0, 40.0), (60.0, 41.5), (50.0, 60.0)])),
+    ]
+    cells = spark.range(h * w).select(
+        F.expr(f"id DIV {w}").alias("y"), (F.col("id") % w).alias("x")
+    )
+    got = np.full((h, w), 0, dtype=np.int64)
+    for r in cells.select("y", "x", zonal.zone_expr(polys).alias("id")).collect():
+        got[r.y, r.x] = r.id
+    want = rasterize_tile(0, 0, h, w, polys).reshape(h, w)
+    np.testing.assert_array_equal(got, want)
+    assert len(np.unique(want)) == 13  # every zone and the nodata zone burn
+    for r in zonal.rasterize_polygons(spark, polys, h, w, 20).collect():
+        assert list(r.zid) == rasterize_tile(r.y0, r.x0, r.h, r.w, polys).tolist()

@@ -24,7 +24,10 @@ PINS = {
     # tiles+pages by this query's seconds, and it now builds no tiles:
     # a bench.py figure across this change compares two algorithms.
     "zonal_stats_rect": (1, 0, 4),
-    "zonal_stats_poly": (3, 1, 4),
+    # (was 3, 1, 4): the zone id is zone_expr, the ray-cast kernel
+    # compiled into one CASE on the COO rows, so no tiles are packed or
+    # burned in pandas, no join runs and the raster's extent is not read.
+    "zonal_stats_poly": (1, 0, 1),
     "pip_grid": (2, 1, 1),
     "pip_grid_salted": (6, 1, 1),
     "focal_mean_sum": (3, 1, 4),

@@ -5,7 +5,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from scidbgeo_spark.kernels import (
-    PolyPack,
     box3_sum_count,
     points_in_ring,
     rasterize_tile,
@@ -71,7 +70,7 @@ def test_rasterize_burn_order_last_wins_property(seed, n):
         polys.append(
             (zid, np.array([(x0, y0), (x1, y0), (x1, y1), (x0, y1)], dtype=np.float64))
         )
-    out = rasterize_tile(0, 0, 40, 40, PolyPack(polys)).reshape(40, 40)
+    out = rasterize_tile(0, 0, 40, 40, polys).reshape(40, 40)
     # NumPy oracle: paint in order
     want = np.full((40, 40), -999, dtype=np.int32)
     yy, xx = np.mgrid[0:40, 0:40]

@@ -1,6 +1,6 @@
 """Session set-up: the driver-memory default, a new session runs no job, the
-class archive's round trip and conf-dir rule, and the spark-submit
---py-files launch runs a registered query."""
+class archive's round trip and conf-dir rule, the py-files zips, and the
+spark-submit --py-files launch runs a registered query."""
 
 import json
 import os
@@ -8,6 +8,8 @@ import subprocess
 import sys
 import tempfile
 import textwrap
+import time
+import types
 
 from scidbgeo_spark import session
 from scidbgeo_spark.session import _driver_memory
@@ -89,7 +91,8 @@ def test_conf_dir_rule(tmp_path, monkeypatch):
     archive and keeps its conf dir.  So does a private dir that is not the
     user's alone or whose conf dir holds a file.  Another JDK build or
     other launch options give another archive, and the part of a process
-    that died is deleted."""
+    that died is deleted, as is an archive of another key unused for
+    ARCHIVE_DAYS; the archive a launch maps is marked used."""
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     for var in (*session._CLASSPATH_ENV, "PYSPARK_SUBMIT_ARGS"):
         monkeypatch.delenv(var, raising=False)
@@ -109,15 +112,23 @@ def test_conf_dir_rule(tmp_path, monkeypatch):
     live = own / f"scidbgeo_cds_0.jsa.{os.getpid()}.part"
     stale.touch()
     live.touch()
+    old = time.time() - (session.ARCHIVE_DAYS + 1) * 86400
+    unused = own / "scidbgeo_cds_unused.jsa"
+    recent = own / "scidbgeo_cds_recent.jsa"
+    unused.touch()
+    recent.touch()
+    os.utime(unused, (old, old))
     dump = session._class_archive("1g")
     assert os.environ["SPARK_CONF_DIR"] == str(own / "conf")
-    assert sorted(os.listdir(own)) == ["conf", live.name]
+    assert sorted(os.listdir(own)) == sorted(["conf", recent.name, live.name])
     assert dump.part == f"{dump.path}.{os.getpid()}.part"
     assert os.path.dirname(dump.path) == str(own)
     assert "-XX:ArchiveClassesAtExit=" + dump.part in dump.java_options
     open(dump.path, "wb").close()
+    os.utime(dump.path, (old, old))
     mapped = session._class_archive("1g")
     assert mapped.path == dump.path and mapped.part is None
+    assert os.path.getmtime(dump.path) > old + 86400  # marked used, so kept
     assert "-XX:SharedArchiveFile=" + dump.path in mapped.java_options
     assert session._class_archive("2g").path != dump.path
     monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--driver-class-path x.jar pyspark-shell")
@@ -143,6 +154,24 @@ def test_conf_dir_rule(tmp_path, monkeypatch):
     (conf / "spark-defaults.conf").write_text("spark.ui.enabled false\n")
     assert session._class_archive("1g") is None
     assert os.environ["SPARK_CONF_DIR"] == str(conf)
+
+
+def test_pyfiles_zip_of_dead_process_removed(tmp_path, monkeypatch):
+    """The py-files zip of a process that no longer runs is deleted; this
+    process's own zip is built, shipped once and stays while it runs."""
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    dead = subprocess.Popen(["true"])
+    dead.wait()
+    (tmp_path / f"scidbgeo_spark_pyfiles_{dead.pid}.zip").touch()
+    shipped = []
+    spark = types.SimpleNamespace(sparkContext=types.SimpleNamespace(addPyFile=shipped.append))
+    entry._ensure_pyfiles(spark)
+    entry._ensure_pyfiles(spark)
+    own = f"scidbgeo_spark_pyfiles_{os.getpid()}.zip"
+    assert shipped == [str(tmp_path / own)]
+    assert os.listdir(tmp_path) == [own]
 
 
 def test_spark_submit_pyfiles_launch(tmp_path):
