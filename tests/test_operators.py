@@ -504,10 +504,10 @@ def test_focal_mean_time_matches_per_band_2d(spark, sf_correct):
 
 def test_rasterize_layer_df_matches_driver_list_path(spark, sf_correct):
     """DataFrame-layer rasterize (per-tile bbox-pruned broadcast range
-    join) == whole-layer broadcast rasterize, on the rect grid AND the
-    overlapping MIXED layer (burn order by ascending zone_id == list
-    order for the fixtures); tiles with no overlapping ring burn to the
-    nodata zone."""
+    join, ray-cast kernel) == the driver-list path (zone_expr tiles), on
+    the rect grid AND the overlapping MIXED layer (burn order by
+    ascending zone_id == list order for the fixtures); tiles with no
+    overlapping ring burn to the nodata zone."""
     from scidbgeo_spark.kernels import NODATA_ZONE
 
     h = w = 100
