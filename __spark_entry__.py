@@ -50,13 +50,14 @@ def _ensure_pyfiles(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_scidbgeo_pyfiles", False):
         return
-    # one zip per driver process, deleted as it exits; here go the zips
-    # of processes that died before they could delete theirs
-    tmp = tempfile.gettempdir()
-    session.remove_orphans(tmp, r"scidbgeo_spark_pyfiles_(\d+)\.zip")
+    # one zip per driver process, deleted as it exits; in the private dir
+    # the zips of processes that died before they could are swept
+    d = session.private_dir()
+    if d is not None:
+        session.sweep(d)
     # always rebuild: a recycled pid (or an edited package) must never
     # ship a stale zip to the workers
-    zpath = os.path.join(tmp, f"scidbgeo_spark_pyfiles_{os.getpid()}.zip")
+    zpath = os.path.join(d or tempfile.gettempdir(), f"scidbgeo_spark_pyfiles_{os.getpid()}.zip")
     atexit.register(session.remove_file, zpath)
     pkg = os.path.join(_REPO, "scidbgeo_spark")
     with zipfile.ZipFile(zpath, "w") as z:

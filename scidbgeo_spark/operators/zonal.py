@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import math
 from collections.abc import Callable
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -46,36 +47,29 @@ ZONE_TILE_SCHEMA = "tile_y int, tile_x int, y0 long, x0 long, h int, w int, zid 
 def zone_expr(polygons, y: Column | str = "y", x: Column | str = "x") -> Column:
     """Zone id (BIGINT) of cell (y, x) under a driver-side polygon layer
     ``[(zone_id, ring), ...]``: ``kernels.rasterize_tile`` compiled into
-    one ``CASE``, equal to it on every cell (pinned by tests).
-
-    Branches run in reverse burn order, so the last polygon wins.  Each
-    is guarded by the kernel's integer crop of the ring's bbox, then runs
-    ``points_in_ring`` unrolled at the pixel centre (x + 0.5, y + 0.5) in
+    one ``CASE``, equal to it on every cell.  Branches run in reverse burn
+    order, so the last polygon wins; each is the kernel's integer bbox
+    crop, then ``points_in_ring`` unrolled at (x + 0.5, y + 0.5) in
     double literals and NumPy's operation order, so every comparison sees
-    the kernel's bits.  Other cells get NODATA_ZONE."""
+    the kernel's bits."""
     y = F.col(y) if isinstance(y, str) else y
     x = F.col(x) if isinstance(x, str) else x
-    px = x.cast("double") + 0.5
-    py = y.cast("double") + 0.5
+    px, py = x.cast("double") + 0.5, y.cast("double") + 0.5
     zone = None
     for zid, ring in reversed(polygons):
         ring = np.asarray(ring, dtype=np.float64)
-        inside = None
+        inside = F.lit(False)
         for (a, b), (c, d) in zip(ring, np.roll(ring, -1, axis=0)):
-            if b == d:  # horizontal edge: never crosses the horizontal ray
-                continue
-            xint = float(a) + (py - float(b)) * float(c - a) / float(d - b)
-            # (b > py) != (d > py), with b and d known
-            hit = (py >= float(min(b, d))) & (py < float(max(b, d))) & (px < xint)
-            inside = hit if inside is None else inside != hit
-        if inside is None:
-            continue
+            if b != d:  # a horizontal edge never crosses the ray; with b
+                # and d known, (b > py) != (d > py) is a range test
+                xint = float(a) + (py - float(b)) * float(c - a) / float(d - b)
+                crosses = (py >= float(min(b, d))) & (py < float(max(b, d)))
+                inside = inside != (crosses & (px < xint))
         (xmin, ymin), (xmax, ymax) = ring.min(axis=0), ring.max(axis=0)
         cond = (x >= math.floor(xmin - 1)) & (x < math.ceil(xmax + 1))
         cond &= (y >= math.floor(ymin - 1)) & (y < math.ceil(ymax + 1)) & inside
         zone = F.when(cond, int(zid)) if zone is None else zone.when(cond, int(zid))
-    zone = F.lit(NODATA_ZONE) if zone is None else zone.otherwise(F.lit(NODATA_ZONE))
-    return zone.cast("long")
+    return (F.lit(NODATA_ZONE) if zone is None else zone.otherwise(NODATA_ZONE)).cast("long")
 
 
 def _zone_tiles(
@@ -106,15 +100,12 @@ def rasterize_polygons(
     chunk: int,
 ) -> DataFrame:
     """Polygon layer ``[(zone_id, ring), ...]`` -> zone-id tile table
-    (pixel-center inclusion): :func:`zone_expr` over every cell of each tile.
-
-    Replaces ParallelRasterization/BigRasterization
-    (SciDBParallel.py:935-961, 795-897): instead of mp.Pool workers writing
-    per-instance COO files, each Spark task rasterizes the chunks of its
-    partition.  No registered query takes this path (zonal queries put
-    :func:`zone_expr` on their COO rows); perfbench's traced
-    ``zonal.rasterize_poly_s`` span times it."""
-    return _zone_tiles(spark, height, width, chunk, lambda y, x: zone_expr(polygons, y, x))
+    (pixel-center inclusion): :func:`zone_expr` over every cell of each
+    tile.  Replaces ParallelRasterization/BigRasterization
+    (SciDBParallel.py:935-961, 795-897), whose mp.Pool workers wrote
+    per-instance COO files.  No registered query builds these tiles:
+    zonal queries put :func:`zone_expr` on their COO rows."""
+    return _zone_tiles(spark, height, width, chunk, partial(zone_expr, polygons))
 
 
 def rect_zone(
@@ -163,19 +154,12 @@ def rasterize_rect_grid(
     zone_w: int,
 ) -> DataFrame:
     """Zone tiles for the full-grid rectangle layer: :func:`rect_zone`
-    over every cell of each tile.
-
-    Equal to ``kernels.rasterize_tile`` over ``rect_grid_polygons(h, w)``
-    (pinned by the kernel-parity test).  No registered query takes this
-    path — rect-grid zonal queries put :func:`rect_zone` on their COO
-    rows instead; the callers that want zone TILES are the phase-timed
-    ``cli.run_zonal``, the ``rasterize`` stage of
-    ``plans.lineage``'s checkpointed pipeline, ``tools/scale_smoke.py``
-    and perfbench's traced ``zonal.rasterize_rect_s`` span."""
-    return _zone_tiles(
-        spark, height, width, chunk,
-        lambda y, x: rect_zone(height, width, zone_h, zone_w, y, x),
-    )
+    over every cell of each tile.  Zonal queries put the zone column on
+    COO rows instead; this serves the callers that want zone TILES:
+    ``cli.run_zonal``, ``plans.lineage``, ``tools/scale_smoke.py`` and
+    perfbench."""
+    zone = partial(rect_zone, height, width, zone_h, zone_w)
+    return _zone_tiles(spark, height, width, chunk, zone)
 
 
 def zonal_stats(cells: DataFrame, keys: list[str]) -> DataFrame:

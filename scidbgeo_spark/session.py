@@ -34,14 +34,15 @@ and maps it into the next one:
   so an archive is never rewritten under a JVM that maps it.  That
   happens in ``stop_spark``, in the next ``get_spark`` of the process,
   or at interpreter exit; concurrent first sessions each write their own
-  part, and the last to be published wins.  The part of a process that
-  died first is deleted by the next ``get_spark`` that looks for the
-  archive.
+  part, and the last to be published wins.
 - A ``get_spark`` that maps the archive sets its mtime to now.  Each
-  one that looks for it deletes the archives of other keys whose mtime
-  is more than ``ARCHIVE_DAYS`` old: each is 100-200 MB, and a JDK
-  update or a run with other launch options would otherwise leave one
-  behind for good.
+  one that looks for it, and each py-files zip ``__spark_entry__``
+  writes there, first deletes (:func:`sweep`) the parts and zips of
+  processes that died before they could, and the archives of other
+  keys whose mtime is more than ``ARCHIVE_DAYS`` old: each is 100-200
+  MB, and a JDK update or a run with other launch options would
+  otherwise leave one behind for good.  Only files in this user's own
+  directory are ever deleted.
 - The JDK will not archive with a non-empty directory on the class path,
   and Spark's launcher puts the conf dir first on it.  So the archive is
   used only when the conf dir (``SPARK_CONF_DIR``, else
@@ -106,7 +107,7 @@ def _driver_memory(phys_bytes: int) -> str:
     return f"{min(48, max(1, phys_bytes * 2 // 5 // 2**30))}g"
 
 
-def _private_dir() -> str | None:
+def private_dir() -> str | None:
     """``<tmp>/scidbgeo-<uid>``, made with mode 0700, holding the archive
     and an empty ``conf`` dir; None when it is not this user's own
     directory, when someone else may write to it, or when ``conf`` holds a
@@ -150,45 +151,44 @@ def _alive(pid: int) -> bool:
 
 
 def remove_file(path: str) -> None:
-    """Delete ``path``, which another process may have deleted first."""
-    with contextlib.suppress(FileNotFoundError):
+    """Delete ``path``, which another process may have deleted first, or
+    which this user may not delete."""
+    with contextlib.suppress(FileNotFoundError, PermissionError):
         os.remove(path)
 
 
-def remove_orphans(d: str, pattern: str) -> None:
-    """Delete the files in ``d`` whose whole name matches ``pattern``, whose
-    one group is the pid of the process that wrote the file, when that
-    process no longer runs."""
-    for n in os.listdir(d):
-        m = re.fullmatch(pattern, n)
-        if m and not _alive(int(m.group(1))):
-            remove_file(os.path.join(d, n))
+def sweep(d: str, keep: str = "") -> None:
+    """Delete from the private dir ``d`` what no running process needs:
+    the class-archive part (``<archive>.<pid>.part``) or py-files zip
+    (``scidbgeo_spark_pyfiles_<pid>.zip``) of a process that no longer
+    runs, and an archive other than ``keep`` unused for ``ARCHIVE_DAYS``."""
+    stale = time.time() - ARCHIVE_DAYS * 86400
+    for e in os.scandir(d):
+        dead = re.fullmatch(r".*[._](\d+)\.(?:part|zip)", e.name)
+        with contextlib.suppress(FileNotFoundError):  # another process deleted it
+            if (dead and not _alive(int(dead.group(1)))) or (
+                e.name.endswith(".jsa") and e.path != keep and e.stat().st_mtime < stale
+            ):
+                remove_file(e.path)
 
 
 def _class_archive(mem: str) -> _Archive | None:
     """The class archive for a driver JVM launched now with ``mem`` of
     driver memory, or None when it launches without one; points
-    ``SPARK_CONF_DIR`` at the engine's empty conf dir when the archive is
-    used, and deletes the parts of processes that died and the archives
-    of other keys unused for ``ARCHIVE_DAYS`` (see the module
-    docstring)."""
+    ``SPARK_CONF_DIR`` at the engine's empty conf dir and sweeps the
+    private dir when the archive is used (see the module docstring)."""
     home = _find_spark_home()
     conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(home, "conf")
     if any(os.environ.get(v) for v in _CLASSPATH_ENV) or (
         os.path.isdir(conf) and not all(n.endswith(".template") for n in os.listdir(conf))
     ):
         return None
-    d = _private_dir()
+    d = private_dir()
     if d is None:
         return None
-    remove_orphans(d, r".*\.(\d+)\.part")  # a part is <archive>.<pid>.part
     os.environ["SPARK_CONF_DIR"] = os.path.join(d, "conf")
     path = os.path.join(d, f"scidbgeo_cds_{_key(home, mem)}.jsa")
-    stale = time.time() - ARCHIVE_DAYS * 86400
-    for e in os.scandir(d):  # another process may delete it first
-        with contextlib.suppress(FileNotFoundError):
-            if e.name.endswith(".jsa") and e.path != path and e.stat().st_mtime < stale:
-                os.remove(e.path)
+    sweep(d, path)
     with contextlib.suppress(FileNotFoundError):
         os.utime(path)  # the archive exists: mark it used, and map it
         return _Archive(f"{shlex.quote('-XX:SharedArchiveFile=' + path)} {_QUIET}", path, None)

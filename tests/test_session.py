@@ -157,21 +157,39 @@ def test_conf_dir_rule(tmp_path, monkeypatch):
 
 
 def test_pyfiles_zip_of_dead_process_removed(tmp_path, monkeypatch):
-    """The py-files zip of a process that no longer runs is deleted; this
-    process's own zip is built, shipped once and stays while it runs."""
+    """The py-files zip goes to the private dir, where the zip of a process
+    that no longer runs is deleted; this process's own zip is built,
+    shipped once and stays while it runs.  A zip in the shared temp dir,
+    which may be another user's, is left alone, and one that may not be
+    deleted does not stop the launch."""
     import __spark_entry__ as entry
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     dead = subprocess.Popen(["true"])
     dead.wait()
-    (tmp_path / f"scidbgeo_spark_pyfiles_{dead.pid}.zip").touch()
-    shipped = []
-    spark = types.SimpleNamespace(sparkContext=types.SimpleNamespace(addPyFile=shipped.append))
-    entry._ensure_pyfiles(spark)
-    entry._ensure_pyfiles(spark)
-    own = f"scidbgeo_spark_pyfiles_{os.getpid()}.zip"
-    assert shipped == [str(tmp_path / own)]
-    assert os.listdir(tmp_path) == [own]
+    zip_of = "scidbgeo_spark_pyfiles_{}.zip".format
+    own = tmp_path / f"scidbgeo-{os.getuid()}"
+    own.mkdir(0o700)
+    (own / zip_of(dead.pid)).touch()
+    (tmp_path / zip_of(dead.pid)).touch()
+
+    def launch():
+        shipped = []
+        spark = types.SimpleNamespace(sparkContext=types.SimpleNamespace(addPyFile=shipped.append))
+        entry._ensure_pyfiles(spark)
+        entry._ensure_pyfiles(spark)
+        assert shipped == [str(own / zip_of(os.getpid()))]
+
+    def denied(path):
+        raise PermissionError(path)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "remove", denied)
+        launch()
+    assert (own / zip_of(dead.pid)).exists()
+    launch()
+    assert sorted(os.listdir(own)) == ["conf", zip_of(os.getpid())]
+    assert sorted(os.listdir(tmp_path)) == sorted([own.name, zip_of(dead.pid)])
 
 
 def test_spark_submit_pyfiles_launch(tmp_path):
