@@ -16,7 +16,6 @@ import atexit
 import os
 import sys
 import tempfile
-import zipfile
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -59,14 +58,7 @@ def _ensure_pyfiles(spark: SparkSession) -> None:
     # ship a stale zip to the workers
     zpath = os.path.join(d or tempfile.gettempdir(), f"scidbgeo_spark_pyfiles_{os.getpid()}.zip")
     atexit.register(session.remove_file, zpath)
-    pkg = os.path.join(_REPO, "scidbgeo_spark")
-    with zipfile.ZipFile(zpath, "w") as z:
-        for root, _dirs, files in os.walk(pkg):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, _REPO))
-    sc.addPyFile(zpath)
+    sc.addPyFile(session.zip_package(zpath))
     sc._scidbgeo_pyfiles = True
 
 

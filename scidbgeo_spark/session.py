@@ -53,6 +53,19 @@ and maps it into the next one:
   ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR`` or ``SPARK_DIST_CLASSPATH``
   adds to the class path, the JVM launches with no archive.
 
+Session extensions.  ``get_spark`` sets the static conf
+``spark.sql.extensions.test.loadFromCp=false``, so a session does not
+look for ``SparkSessionExtensionsProvider`` services on the class path
+(a ``ServiceLoader`` scan of every jar).  The only provider in Spark's
+jars is MLlib's ``InternalFunctionRegistration``: it registers
+``vector_to_array``, ``array_to_vector`` and ``aggregate_metrics`` as
+internal functions for Spark Connect ML, and building their TypeTag UDFs
+starts Scala's runtime reflection.  That was about 40% of the session
+constructor; no engine query calls them, and classic PySpark's
+``pyspark.ml.functions`` reaches MLlib directly.  Extensions named in
+``spark.sql.extensions`` still apply: a deployment that needs one names
+it there.
+
 To see that a session mapped the archive, look for its path in
 ``/proc/<pid>/maps`` of the driver JVM (``SparkContext._gateway.proc``).
 The JDK's reason for not mapping it is off the console
@@ -74,6 +87,7 @@ import stat
 import subprocess
 import tempfile
 import time
+import zipfile
 from typing import NamedTuple
 
 from pyspark import SparkContext
@@ -172,6 +186,21 @@ def sweep(d: str, keep: str = "") -> None:
                 remove_file(e.path)
 
 
+def zip_package(out: str) -> str:
+    """Write every ``.py`` file of this package to the zip ``out``, at its
+    path under the directory that holds the package (the layout
+    ``--py-files`` and ``addPyFile`` put on the workers' path); returns
+    ``out``."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    with zipfile.ZipFile(out, "w") as z:
+        for root, _dirs, files in os.walk(pkg):
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    z.write(full, os.path.relpath(full, os.path.dirname(pkg)))
+    return out
+
+
 def _class_archive(mem: str) -> _Archive | None:
     """The class archive for a driver JVM launched now with ``mem`` of
     driver memory, or None when it launches without one; points
@@ -254,6 +283,11 @@ def get_spark(
       there is none yet (module docstring); the options go in
       ``spark.driver.defaultJavaOptions``, so ``--driver-java-options``
       still apply.
+    - no class-path extension discovery (module docstring), so Scala's
+      runtime reflection starts at the first query to use a TypeTag
+      (``collect_list``, ``sequence``, and the planning of a first
+      aggregate), which pays for it: about 0.3 s in a JVM that maps the
+      class archive, 1.0-1.3 s in one that writes it.
     """
     cores = cores or DEFAULT_CPUS
     shuffle = shuffle_partitions or max(cores, 8)
@@ -272,6 +306,7 @@ def get_spark(
         .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.sql.extensions.test.loadFromCp", "false")
     )
     _publish()
     # a new driver JVM launches unless one is up, or spark-submit runs us

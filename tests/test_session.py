@@ -1,6 +1,7 @@
-"""Session set-up: the driver-memory default, a new session runs no job, the
-class archive's round trip and conf-dir rule, the py-files zips, and the
-spark-submit --py-files launch runs a registered query."""
+"""Session set-up: the driver-memory default, a new session runs no job and
+no class-path extension, the class archive's round trip and conf-dir rule,
+the py-files zips, and the spark-submit --py-files launch runs a registered
+query."""
 
 import json
 import os
@@ -10,6 +11,7 @@ import tempfile
 import textwrap
 import time
 import types
+import zipfile
 
 from scidbgeo_spark import session
 from scidbgeo_spark.session import _driver_memory
@@ -23,17 +25,49 @@ def test_driver_memory_is_40_percent_of_ram_in_whole_gib():
     assert _driver_memory(512 * 2**30) == "48g"
 
 
+# The function registry is JVM-global, so the check that no class-path
+# extension ran (MLlib's would register vector_to_array) needs a fresh JVM.
+_NEW_SESSION = textwrap.dedent(
+    """
+    from scidbgeo_spark.session import get_spark
+    s = get_spark(cores=2)
+    print(s.sparkContext.statusTracker().getJobIdsForGroup())
+    catalyst = s.sparkContext._jvm.org.apache.spark.sql.catalyst
+    registry = getattr(getattr(catalyst.analysis, "FunctionRegistry$"), "MODULE$").internal()
+    name = getattr(getattr(catalyst, "FunctionIdentifier$"), "MODULE$").apply("vector_to_array")
+    print(registry.functionExists(name))
+    s.stop()
+    """
+)
+
+
 def test_new_session_runs_no_job():
     # a second SparkContext cannot share the test session's process
-    code = ("from scidbgeo_spark.session import get_spark; s = get_spark(cores=2); "
-            "print(s.sparkContext.statusTracker().getJobIdsForGroup()); s.stop()")
     r = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, timeout=600,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+        [sys.executable, "-c", _NEW_SESSION], capture_output=True, text=True, timeout=600,
+        cwd=REPO, env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
     )
     assert r.returncode == 0, r.stderr[-2000:]
-    assert r.stdout.splitlines()[-1] == "[]"
+    assert r.stdout.splitlines()[-2:] == ["[]", "False"]
+
+
+def test_only_extension_provider_on_class_path_is_mllibs():
+    """get_spark skips class-path extension discovery; the one provider it
+    skips is MLlib's Spark Connect function registration.  A Spark with
+    another provider in its jars fails here rather than losing it."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    service = "META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider"
+    jars = os.path.join(_find_spark_home(), "jars")
+    providers = set()
+    for name in os.listdir(jars):
+        if not name.endswith(".jar"):
+            continue
+        with zipfile.ZipFile(os.path.join(jars, name)) as z:
+            if service in z.namelist():
+                lines = (ln.split("#")[0].strip() for ln in z.read(service).decode().splitlines())
+                providers |= set(filter(None, lines))
+    assert providers == {"org.apache.spark.sql.ml.InternalFunctionRegistration"}
 
 
 # Three driver JVMs in one process, all with the same launch options: the

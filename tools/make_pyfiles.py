@@ -1,8 +1,8 @@
 """Build the --py-files zip for spark-submit (dist/scidbgeo_spark.zip).
 
-Same packaging rule as ``__spark_entry__._ensure_pyfiles`` (which ships
-the package at runtime via addPyFile for the driver-contract path); this
-tool writes it to disk for explicit spark-submit launches:
+Writes the zip ``__spark_entry__._ensure_pyfiles`` ships at runtime via
+addPyFile (both call ``session.zip_package``) to disk, for explicit
+spark-submit launches:
 
     python tools/make_pyfiles.py [out.zip]
 """
@@ -11,22 +11,17 @@ from __future__ import annotations
 
 import os
 import sys
-import zipfile
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+
+from scidbgeo_spark.session import zip_package  # noqa: E402
 
 
 def build(out: str | None = None) -> str:
     out = out or os.path.join(_REPO, "dist", "scidbgeo_spark.zip")
     os.makedirs(os.path.dirname(out), exist_ok=True)
-    pkg = os.path.join(_REPO, "scidbgeo_spark")
-    with zipfile.ZipFile(out, "w") as z:
-        for root, _dirs, files in os.walk(pkg):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, _REPO))
-    return out
+    return zip_package(out)
 
 
 if __name__ == "__main__":
